@@ -1,84 +1,41 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-COMPACT JSON line (~200 bytes): {"metric", "value", "unit", "sf",
-"n_queries", "n_errors", ...}.  Per-query medians, per-run samples, row
-counts and errors are written to BENCH_DETAIL.json beside this script —
-the driver captures only a bounded tail of stdout (~2.5 KB), and the
-round-2/3 benches went unrecorded because the full 133-query line
-(~18 KB) overflowed it.
+"""Benchmark harness: times every registry query at $SPARK_GRAFT_SF_DIR
+(default: the sf0.1 test tables) on local[$SPARK_GRAFT_CPUS] and prints
+ONE compact JSON line:
 
-Each query gets ONE UNTIMED warm-up evaluation (JIT, shuffle-file and
-page-cache state, broadcast builds) followed by $SPARK_GRAFT_BENCH_N
-timed runs (default 3); the MEDIAN of the timed runs is reported and the
-MIN is recorded alongside in BENCH_DETAIL.json.  Round-4 evidence for
-discarding the first run: q134 runs were [3.93, 0.44, 0.41] and q107
-[5.54, 9.94, 1.99] — first-run and GC effects, not plan changes, were
-deciding medians, making round-over-round comparison noise-bound.  The
-warm-up run is NOT included in any reported number.
+    {"metric", "value", "unit", "sf", "queries", "n_queries",
+     "n_errors", "n_runs", "steal_pct", "detail", "n_queries_in_line"}
 
-COLD-CACHE TIMED REGION (round-9 verdict #1, round 10): the warm-up
-used to materialize every ``persist()`` in the query, so the timed runs
-of the ~61 persist-carrying queries read cache and never paid
-materialization — a persist that honestly turns "compute twice" into
-"compute once" was measured as "compute ~zero".  Every timed run now
-starts from a COLD Spark cache: ``spark.catalog.clearCache()`` is
-called before each run and the query plan is REBUILT (a fresh
-``fn(spark, sf_dir)`` call re-registers its persists — clearCache
-alone would leave the old plan's cache registrations gone, silently
-timing a never-caching plan that re-executes shared subtrees per
-consumer, which is colder than any honest production run).  Each timed
-run therefore pays persist materialization exactly once and reuses it
-within the run — the honest cold-run cost.  JIT/page-cache/broadcast
-warmth is retained (the warm-up still runs first); plan CONSTRUCTION
-stays untimed as it always was (eager probes included).  Archived
-medians recorded under the old warm-cache convention are NOT comparable
-for persist-carrying queries, so BENCH_DETAIL now carries
-``timed_cache: "cold"`` and the best-known-median comparator only uses
-archives recorded under the same convention (the job-submission floor
-probe involves no caching and stays comparable across all archives).
-The same-host A/B of this harness change at identical code is committed
-in OPTIMIZATION_r10.md.
+``value`` is the sum of the per-query medians in seconds.  ``queries``
+holds the largest medians that keep the line within
+``COMPACT_LINE_BUDGET`` bytes, because the bench recorder keeps only a
+bounded tail of stdout; the complete map is in BENCH_DETAIL.json.
 
-SELF-QUALIFYING ARTIFACT (round-6 verdict #1): the official record is
-the driver's only perf signal, and round 6's official run was recorded
-on a host with ~10^4 s of accumulated CPU steal — 86.3 s total and
-seven apparent 1.4–2.3x per-query regressions ALL dissolved under
-isolated re-times.  So every bench now embeds the evidence needed to
-adjudicate itself:
+Measurement model, per query:
 
-- ``host_health``: /proc/stat steal + iowait jiffie deltas across the
-  run, as a percentage of total CPU time.  steal_pct > ~1% means the
-  hypervisor took CPU away mid-run and medians are not comparable
-  round-over-round.
-- ``retimes``: after the sweep finishes (forced GC, caches cleared),
-  the queries whose medians moved >1.5x vs their BEST-KNOWN archived
-  median (the minimum across ALL BENCH_DETAIL_r* files — round-7
-  verdict #3: a prev-round-only comparator let a 1.3x-per-round creep
-  slip under the trigger forever) are re-timed one more time each, in
-  isolation at the end of the run.  A re-time near the best-known
-  median brands the official median as in-run ``noise``; a re-time
-  that merely tracks the fleet-wide ``drift_vs_best`` (median over ALL
-  queries of this-run/best-known — the whole run sitting on a slower
-  host) brands ``host_shift``; only a re-time slower than both
-  best-known and the fleet drift is ``confirmed`` (round-8 evidence:
-  six sub-second queries flagged 1.3–1.9x on a 1.3%-steal host whose
-  fleet median had itself moved — per-query flags that a uniform-drift
-  check dissolves).
-- ``floor_probe_sec`` + class-aware drift (round-9 verdict #1): each
-  run measures its own job-submission floor (warm ``spark.range(1)``
-  noop save — pure submission/commit/AQE-scheduling cost, ~0.10–0.14 s
-  historically).  Stage-count-dominated tiny queries (best-known median
-  within ``FLOOR_DOMINANCE``x the best-known floor) are adjudicated
-  against the FLOOR shift, not the scan-weighted fleet drift: round 8's
-  five residual ``confirmed`` flags (q31/q70/q78/q89/q95) were exactly
-  this class moving 1.5–2x on a per-stage scheduling-cost shift the
-  1.12 fleet median under-explained.  Verdict ``floor_shift``.
-- ``adjudicated_value`` (round-7 verdict #2): the headline ``value``
-  sums in-session medians, so a noise-branded mover still inflates it;
-  the adjudicated total substitutes every successfully re-timed
-  query's isolated median into the same sum.  When the two fields
-  diverge, trust ``adjudicated_value`` — each substitution's evidence
-  is in ``retimes``.
+- one UNTIMED warm-up evaluation (codegen/JIT, parquet footer and page
+  cache, broadcast builds), never part of any reported number, because
+  first-run and GC effects otherwise decide the median;
+- $SPARK_GRAFT_BENCH_N cold-cache timed runs (default 3).  Each run
+  calls ``spark.catalog.clearCache()`` and rebuilds the plan, so every
+  run pays its persists' materialization once and reuses it within the
+  run.  The rebuild matters: after clearCache alone the old plan has no
+  cache registrations and recomputes shared subtrees per consumer.
+  Only the noop-sink action is timed, plan construction is not
+  (``_timed_cold_runs``);
+- ``runs``, ``median``, ``min``, ``rows``, ``rows_per_sec`` and
+  ``steal_pct`` (the CPU steal of that query's own measurement window)
+  in BENCH_DETAIL.json ``queries_detail``.
+
+The run-level ``host_health`` block records /proc/stat steal, iowait and
+busy percentages across the whole sweep: steal_pct above ~1% means the
+hypervisor took CPU away mid-run and the medians are not comparable
+with a run on a quiet host.  This harness does not judge regressions
+itself; comparing two versions is the job of ``perfbench/``, which runs
+parent and change in interleaved pairs against fixed bounds.
+
+``SPARK_GRAFT_BENCH_ONLY`` (comma-separated substrings) restricts the
+sweep to matching query names; ``SPARKDIFF_BENCH_DIR`` redirects
+BENCH_DETAIL.json away from the repository root.
 """
 
 from __future__ import annotations
@@ -94,13 +51,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from sparkdiff.queries import QUERIES  # noqa: E402
 from sparkdiff.session import get_spark  # noqa: E402
-
-#: Timed-region cache convention of THIS harness version.  "warm" (all
-#: archives through round 9): one warm-up materialized every persist and
-#: the timed runs read cache.  "cold" (round 10+): clearCache + fresh
-#: plan per timed run, so persist materialization is paid inside the
-#: timed region.  Medians are only comparable within one convention.
-TIMED_CACHE = "cold"
 
 #: Upper bound for the one-line stdout JSON.  The driver keeps only the
 #: LAST ~2000 bytes of output (BENCH_r02/r03 were lost to an 18 KB
@@ -161,209 +111,22 @@ def _host_health(before: dict[str, int] | None, after: dict[str, int] | None, wa
     }
 
 
-# Job-submission floor bootstrap: the ROADMAP constant-floor audit measured
-# a warm `spark.range(1)` noop save at ~0.10 s on this harness.  Used as the
-# best-known floor until archives carry their own `floor_probe_sec` (the
-# probe is recorded per-run from round 9 on, so the bootstrap ages out).
-FLOOR_BASELINE_SEC = 0.10
-# A query counts as FLOOR-DOMINATED when its best-known median is within
-# this multiple of the best-known floor — i.e. its runtime is ~stage-count x
-# per-stage scheduling cost, not scan/shuffle work.  Round-8 evidence: the
-# five residual `confirmed` flags (q31/q70/q78/q89/q95) had bests
-# 0.11-0.87 s on a ~0.10-0.14 s floor, all git-identical in code and plan.
-FLOOR_DOMINANCE = 10.0
-
-
-def _measure_floor(spark, n_runs: int) -> float:
-    """Median wall time of a warm `spark.range(1)` noop save — pure job
-    submission + commit + AQE stage scheduling, zero operator work.  The
-    per-host per-stage cost that floor-dominated queries multiply."""
-    df = spark.range(1)
-    df.write.format("noop").mode("overwrite").save()  # warm-up, untimed
-    runs = []
-    for _ in range(max(1, n_runs)):
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        runs.append(time.perf_counter() - t0)
-    return round(statistics.median(runs), 4)
-
-
-def _archive_rounds(
-    here: str, rnd: int, sf: float | None = None
-) -> list[tuple[int, dict]]:
-    """(round, parsed json) for every BENCH_DETAIL_r*.json before ``rnd``.
-    When ``sf`` is given, archives recorded at a DIFFERENT scale factor
-    are excluded — an sf0.001 experiment's microsecond medians must never
-    become the best-known base for sf0.1 comparisons (archives without an
-    ``sf`` field are kept: all pre-round-9 archives are sf0.1 full runs)."""
-    out: list[tuple[int, dict]] = []
-    for f in sorted(os.listdir(here)):
-        m = re.fullmatch(r"BENCH_DETAIL_r(\d+)\.json", f)
-        if not m or int(m.group(1)) >= rnd:
-            continue
-        try:
-            with open(os.path.join(here, f)) as fh:
-                arch = json.load(fh)
-        except (OSError, json.JSONDecodeError):
-            continue
-        if sf is not None and arch.get("sf") is not None and arch["sf"] != sf:
-            continue
-        out.append((int(m.group(1)), arch))
-    return out
-
-
-def _best_known_medians(
-    here: str, rnd: int, sf: float | None = None
-) -> dict[str, tuple[float, int]]:
-    """Per-query best-known median across ALL archived rounds before
-    ``rnd``, as {query: (median, round_it_was_set)} — the comparison base
-    for the end-of-run re-time pass.  Round-7 verdict #3: comparing only
-    against the PREVIOUS round left a creeping-regression blind spot (a
-    query drifting 1.3x every round never crossed the 1.5x trigger);
-    comparing against the full archive set has no such blind spot.
-
-    ROBUST BASE (round-9, advisor finding): the raw minimum of N noisy
-    measurements drifts downward as rounds accumulate, so one
-    anomalously fast archived median would pin a query as a permanent
-    mover.  With >= 3 archived medians the base is therefore the MEDIAN
-    OF THE 3 SMALLEST (one lucky outlier cannot dominate alone); with
-    fewer it stays the plain minimum.
-
-    TIMED-CACHE GATE (round 10): only archives recorded under the SAME
-    timed-region cache convention as this harness are comparable — a
-    warm-cache archive's median excludes persist materialization that a
-    cold-cache run pays, so using it as the base would brand every
-    persist-carrying query a permanent regression.  Archives without a
-    ``timed_cache`` field are "warm" (all rounds through 9)."""
-    samples: dict[str, list[tuple[float, int]]] = {}
-    for arch_rnd, arch in _archive_rounds(here, rnd, sf):
-        if arch.get("timed_cache", "warm") != TIMED_CACHE:
-            continue
-        for q, d in arch.get("queries_detail", {}).items():
-            med = d.get("median")
-            if med:
-                samples.setdefault(q, []).append((med, arch_rnd))
-    best: dict[str, tuple[float, int]] = {}
-    for q, pairs in samples.items():
-        pairs.sort()
-        best[q] = pairs[1] if len(pairs) >= 3 else pairs[0]
-    return best
-
-
-def _best_known_floor(
-    here: str, rnd: int, sf: float | None = None
-) -> tuple[float, int | None]:
-    """Best-known archived `floor_probe_sec` across rounds before
-    ``rnd`` as (floor, round); falls back to the FLOOR_BASELINE_SEC
-    bootstrap (round None) while no archive carries a probe yet.  The
-    floor probe involves no caching, so ALL archives are comparable
-    regardless of their timed_cache convention.
-
-    Robust base (round-9 verdict #8): same rule as the medians — with
-    >= 3 archived probes the base is the median of the 3 smallest, so
-    one anomalously fast probe (the r09 retime probe read 0.017 s on a
-    fully-JIT-warm session) cannot pin the floor ratio high forever;
-    with fewer it is the plain minimum."""
-    probes: list[tuple[float, int]] = []
-    for arch_rnd, arch in _archive_rounds(here, rnd, sf):
-        probe = arch.get("floor_probe_sec")
-        if probe:
-            probes.append((probe, arch_rnd))
-    if not probes:
-        return (FLOOR_BASELINE_SEC, None)
-    probes.sort()
-    return probes[1] if len(probes) >= 3 else probes[0]
-
-
-def _median_ratio_vs_base(
-    timings: dict[str, float | None],
-    base: dict[str, tuple[float, int]],
-) -> float | None:
-    """Fleet-wide drift indicator: the MEDIAN over all measured queries
-    of (this run's median / best-known median).  ~1.0 on a healthy
-    host; uniformly >1 when the whole run sits on a slower host than
-    the best archive — the signature that distinguishes 'one query
-    regressed' (isolated spike, fleet median ~1) from 'the floor moved'
-    (every query shifted together)."""
-    ratios = sorted(
-        med / base[n][0]
-        for n, med in timings.items()
-        if med is not None and base.get(n)
-    )
-    if not ratios:
-        return None
-    mid = len(ratios) // 2
-    r = (
-        ratios[mid]
-        if len(ratios) % 2
-        else (ratios[mid - 1] + ratios[mid]) / 2
-    )
-    return round(r, 3)
-
-
-def _retime_verdict(
-    iso_ratio: float,
-    drift: float | None,
-    floor_ratio: float | None = None,
-    floor_dominated: bool = False,
-) -> str:
-    """Brand an isolated re-time against the best-known median:
-
-    - ``noise``       — isolated run is back near best-known; the
-      official median was in-run interference.
-    - ``floor_shift`` — (round-9, class-aware drift) the query is
-      FLOOR-DOMINATED (best-known median within FLOOR_DOMINANCE x the
-      best-known job-submission floor) and its isolated slowdown tracks
-      the measured floor shift of THIS run's `spark.range(1)` probe.
-      Round-8 evidence for the class: a host's per-stage scheduling
-      cost moved 1.5-2x while the scan-weighted fleet `drift_vs_best`
-      read 1.12, so stage-count-dominated tiny queries (q31/q70/q78/
-      q89/q95) were branded `confirmed` on git-identical code+plans.
-      Scan-bound queries never take this branch (the dominance gate).
-    - ``host_shift``  — isolated run tracks the FLEET's uniform drift
-      (within the same 1.25 tolerance of drift x best): the whole run
-      sits on a slower host, so this query did not individually
-      regress.
-    - ``confirmed``   — slower than best-known AND than what either
-      comparator explains: a real per-query regression.
-
-    Both shift comparators only absorb modest (<= 3x) uniform movement —
-    beyond that something other than host state is wrong and the flag
-    must surface (same cap rationale as round 8's drift cap)."""
-    if iso_ratio <= 1.25:
-        return "noise"
-    if (
-        floor_dominated
-        and floor_ratio is not None
-        and 1.0 < floor_ratio <= 3.0
-        and iso_ratio <= 1.25 * floor_ratio
-    ):
-        return "floor_shift"
-    if drift is not None and 1.0 < drift <= 3.0 and iso_ratio <= 1.25 * drift:
-        return "host_shift"
-    return "confirmed"
-
-
-def _select_movers(
-    timings: dict[str, float | None],
-    base: dict[str, tuple[float, int]],
-    threshold: float = 1.5,
-    cap: int = 10,
-) -> list[tuple[str, float]]:
-    """Queries whose official median exceeds ``threshold`` x their
-    best-known archived median, worst ratio first, capped — the set the
-    end-of-run isolated re-time pass measures.  Pure so the trigger is
-    unit-testable (synthetic-creep pin in tests/test_bench_health.py)."""
-    return sorted(
-        (
-            (name, med / base[name][0])
-            for name, med in timings.items()
-            if med is not None
-            and name in base
-            and med > threshold * base[name][0]
-        ),
-        key=lambda kv: -kv[1],
-    )[:cap]
+def compact_line(head: dict, timings: dict[str, float | None]) -> str:
+    """The one stdout JSON line: ``head`` plus the per-query medians
+    (``queries``) and how many of them made it into the line
+    (``n_queries_in_line``).  The bench recorder's per-query comparator
+    reads ``queries``, but the full 202-entry map serializes to ~6 KB,
+    over the recorder's ~2000-byte tail capture, so the smallest medians
+    are dropped until the line fits ``COMPACT_LINE_BUDGET`` bytes.
+    Failed queries (None) are left out."""
+    qmap = {n: round(t, 3) for n, t in timings.items() if t is not None}
+    line = {**head, "queries": qmap, "n_queries_in_line": len(qmap)}
+    for n in sorted(qmap, key=qmap.get):
+        if len(json.dumps(line)) <= COMPACT_LINE_BUDGET:
+            break
+        del qmap[n]
+    line["n_queries_in_line"] = len(qmap)
+    return json.dumps(line)
 
 
 def main() -> None:
@@ -377,10 +140,6 @@ def main() -> None:
     # the queries, not session startup
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     spark.read.parquet(os.path.join(sf_dir, "customer.parquet")).count()
-    # this host+session's job-submission floor — the per-stage scheduling
-    # cost that floor-dominated queries multiply; archived so future rounds
-    # can adjudicate floor shifts (round-9 class-aware drift)
-    floor_probe = _measure_floor(spark, n_runs)
 
     jiffies_before = _cpu_jiffies()
     wall_t0 = time.perf_counter()
@@ -447,187 +206,42 @@ def main() -> None:
     spark.sparkContext.setJobDescription(None)
 
     total = round(sum(t for t in timings.values() if t is not None), 4)
-    # artifact directory override: lets tests (and local experiments)
-    # write BENCH_DETAIL*.json somewhere other than the repo root, whose
-    # archives are round evidence a stray run must not clobber
-    here = os.environ.get("SPARKDIFF_BENCH_DIR") or os.path.dirname(
-        os.path.abspath(__file__)
-    )
-    # Per-round archive round number: BENCH_DETAIL.json is overwritten by
-    # every bench run, which erased round-4's per-query medians — so each
-    # run ALSO writes BENCH_DETAIL_r<N>.json, N from $SPARKDIFF_BENCH_ROUND
-    # or inferred as (highest driver-recorded BENCH_r*.json) + 1 (the round
-    # currently being built).  Repeated local runs within a round overwrite
-    # the same archive; the last bench of the round — the driver's own — is
-    # what survives, which is exactly the evidence the judge diffs
-    # round-over-round.
-    rnd = os.environ.get("SPARKDIFF_BENCH_ROUND")
-    if not rnd:
-        recorded = [
-            int(m.group(1))
-            for f in os.listdir(here)
-            if (m := re.fullmatch(r"BENCH_r(\d+)\.json", f))
-        ]
-        rnd = str(max(recorded, default=0) + 1)
-
-    # END-OF-RUN RE-TIME PASS: queries whose median moved >1.5x vs their
-    # BEST-KNOWN archived median (minimum across all BENCH_DETAIL_r*
-    # files — round-7 verdict #3 killed the prev-round-only comparison's
-    # creep blind spot; partial SPARK_GRAFT_BENCH_ONLY runs never write
-    # archives) get one more isolated measurement (caches cleared, forced
-    # GC, nothing else running in the session) so the artifact itself
-    # says whether the move was in-run noise or real.
-    base_medians = _best_known_medians(here, int(rnd), sf)
-    drift = _median_ratio_vs_base(timings, base_medians)
-    base_floor, base_floor_round = _best_known_floor(here, int(rnd), sf)
-    floor_ratio = (
-        round(floor_probe / base_floor, 2) if floor_probe and base_floor else None
-    )
-    retimes: dict[str, dict] = {}
-    movers = _select_movers(timings, base_medians)
-    floor_retime = None
-    if movers:
-        spark.catalog.clearCache()
-        spark.sparkContext._jvm.System.gc()
-        # re-probe the floor AT RETIME TIME: the start-of-run probe
-        # misses a degradation window that opens mid-run (observed in
-        # round 9: steal spiked after a healthy 0.065 s start probe and
-        # the contiguous block of queries running inside the window all
-        # flagged), and the isolated re-times below are measured NOW —
-        # so the verdict comparator must be the floor measured with them.
-        floor_retime = _measure_floor(spark, n_runs)
-        floor_ratio = (
-            round(floor_retime / base_floor, 2) if base_floor else floor_ratio
-        )
-        for name, official_ratio in movers:
-            try:
-                df = QUERIES[name](spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()  # warm-up
-                # same cold-cache convention as the official runs —
-                # an isolated re-time must be comparable to the median
-                # it adjudicates
-                runs = _timed_cold_runs(spark, QUERIES[name], sf_dir, n_runs)
-                iso = round(statistics.median(runs), 4)
-            except Exception as exc:  # noqa: BLE001 — harness must survive
-                retimes[name] = {"error": f"{type(exc).__name__}: {exc}"[:200]}
-                continue
-            finally:
-                spark.catalog.clearCache()
-            base_med, base_round = base_medians[name]
-            iso_ratio = round(iso / base_med, 2)
-            floor_dom = base_med <= FLOOR_DOMINANCE * base_floor
-            retimes[name] = {
-                "base_round": base_round,
-                "base_median": base_med,
-                "official_median": timings[name],
-                "official_ratio": round(official_ratio, 2),
-                "isolated_median": iso,
-                "isolated_runs": runs,
-                "isolated_ratio": iso_ratio,
-                "floor_dominated": floor_dom,
-                "verdict": _retime_verdict(
-                    iso_ratio, drift, floor_ratio, floor_dom
-                ),
-            }
-
-    # ADJUDICATED TOTAL (round-7 verdict #2): the official ``value`` sums
-    # in-session medians, so a noise-branded mover still inflates the
-    # driver-visible headline (r7: q142 3.49 official vs 1.65 isolated).
-    # ``adjudicated_value`` substitutes each successfully re-timed
-    # query's isolated median — the cleaner measurement whichever way
-    # the verdict fell — into the same sum.
-    adjudicated = total
-    for name, r in retimes.items():
-        if "isolated_median" in r and timings.get(name) is not None:
-            adjudicated += r["isolated_median"] - timings[name]
-    adjudicated = round(adjudicated, 4)
-
     host_health = _host_health(
         jiffies_before, _cpu_jiffies(), time.perf_counter() - wall_t0
     )
-
     full = {
         "metric": "sparkdiff_total_query_time",
         "value": total,
-        "adjudicated_value": adjudicated,
         "unit": "sec",
         "queries": timings,
-        "timed_cache": TIMED_CACHE,
         "n_runs": n_runs,
         "queries_detail": detail,
         "sf": sf,
         "host_health": host_health,
-        "drift_vs_best": drift,
-        "floor_probe_sec": floor_probe,
-        "floor_probe_retime_sec": floor_retime,
-        "floor_base": {"sec": base_floor, "round": base_floor_round},
-        "floor_ratio": floor_ratio,
-        "retimes": retimes,
     }
     if errors:
         full["errors"] = errors
-    detail_path = os.path.join(here, "BENCH_DETAIL.json")
-    with open(detail_path, "w") as fh:
+    # artifact directory override: lets tests (and local experiments)
+    # write BENCH_DETAIL.json somewhere other than the repo root
+    here = os.environ.get("SPARKDIFF_BENCH_DIR") or os.path.dirname(
+        os.path.abspath(__file__)
+    )
+    with open(os.path.join(here, "BENCH_DETAIL.json"), "w") as fh:
         json.dump(full, fh, indent=1, sort_keys=True)
-    # the per-round archive is ROUND EVIDENCE — only a FULL run may
-    # write it (an ad-hoc SPARK_GRAFT_BENCH_ONLY run used to clobber the
-    # round's full archive with a partial one)
-    if not only:
-        with open(
-            os.path.join(here, f"BENCH_DETAIL_r{int(rnd):02d}.json"), "w"
-        ) as fh:
-            json.dump(full, fh, indent=1, sort_keys=True)
     # stdout gets a compact line only (the driver's tail capture is small);
     # everything else lives in BENCH_DETAIL.json.
-    compact = {
+    head = {
         "metric": "sparkdiff_total_query_time",
         "value": total,
-        "adjudicated_value": adjudicated,
         "unit": "sec",
         "sf": sf,
-        # Per-query medians IN the one-line JSON (round-9 verdict #2: the
-        # driver's per-query comparator reads this key; its absence left
-        # PERF_r09.per_query empty).  The full 202-entry map serializes
-        # to ~6 KB — over the driver's ~2 KB tail capture, which is how
-        # rounds 2/3 lost their whole record — so the map is trimmed to
-        # the LARGEST medians that keep the line under COMPACT_LINE_BUDGET
-        # (additions-only vs round 9, which emitted no map at all; the
-        # complete map is always in BENCH_DETAIL.json "queries").
-        "queries": {},
         "n_queries": len(timings),
         "n_errors": len(errors),
         "n_runs": n_runs,
         "steal_pct": host_health.get("steal_pct"),
-        "drift_vs_best": drift,
-        "floor_probe_sec": floor_probe,
-        "floor_ratio": floor_ratio,
-        "n_retimed": len(retimes),
-        "n_confirmed_regressions": sum(
-            1 for r in retimes.values() if r.get("verdict") == "confirmed"
-        ),
-        # absorbed flags stay visible round-over-round (advisor finding:
-        # only n_retimed/n_confirmed were emitted, so a real regression
-        # silently branded host_shift never surfaced in the compact line)
-        "n_host_shift": sum(
-            1 for r in retimes.values() if r.get("verdict") == "host_shift"
-        ),
-        "n_floor_shift": sum(
-            1 for r in retimes.values() if r.get("verdict") == "floor_shift"
-        ),
         "detail": "BENCH_DETAIL.json",
     }
-    qmap = {
-        n: round(t, 3) for n, t in timings.items() if t is not None
-    }
-    compact["queries"] = qmap
-    compact["n_queries_in_line"] = len(qmap)  # placeholder at max width
-    # trim smallest-median entries until the line fits the tail budget
-    for n in sorted(qmap, key=qmap.get):
-        if len(json.dumps(compact)) <= COMPACT_LINE_BUDGET:
-            break
-        del qmap[n]
-    compact["n_queries_in_line"] = len(qmap)
-    print(json.dumps(compact))
+    print(compact_line(head, timings))
     spark.stop()
 
 

@@ -143,27 +143,6 @@ def with_word_shingles(
     ).drop("_toks")
 
 
-def word_shingles(col: Column | str, k: int = 3) -> Column:
-    """Word k-gram shingles (space-joined token windows).
-
-    Far more selective than character k-grams on natural/templated text:
-    unrelated documents over a shared vocabulary rarely share word
-    *sequences*, so LSH buckets stay small — the property that keeps the
-    candidate join linear at corpus scale.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    toks = F.filter(
-        F.split(F.lower(c), "[^a-z0-9]+"), lambda t: F.length(t) > 0
-    )
-    n = F.size(toks)
-    return F.when(n < k, F.array(F.concat_ws(" ", toks))).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), n - (k - 1)),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
-        )
-    )
-
-
 def minhash_signatures(
     df: DataFrame,
     id_col: str,

@@ -1306,7 +1306,8 @@ def _funnel_flags_sql() -> str:
     """Per-document funnel-gate flags (shared by q67/q68): doc_id,
     whitespace token count, one boolean per filter — the DuckDB replay
     of ``queries._funnel_flags`` (q18 quality, q23 lang-id, q55 trigram
-    repetition, q56 PII patterns)."""
+    repetition, q56 PII patterns).  NULL text gives ``f_pii = false``,
+    as in the Spark form."""
     from sparkdiff.functions.pii import PII_PATTERNS, sql_pii_count
     from sparkdiff.functions.textstats import sql_lang_id, sql_quality_score
 
@@ -1341,7 +1342,7 @@ def _funnel_flags_sql() -> str:
            n_chars BETWEEN 100 AND 100000 AS f_len,
            ({sql_quality_score('text')}) >= 0.45 AS f_quality,
            ({rep3}) <= 0.05 AS f_rep,
-           ({pii_total}) = 0 AS f_pii
+           COALESCE(({pii_total}) = 0, FALSE) AS f_pii
     FROM g
 """
 

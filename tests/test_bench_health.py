@@ -1,21 +1,21 @@
-"""The bench artifact must self-qualify (round-6 verdict #1): host
-health captured around the run, and >1.5x movers re-timed in isolation.
-These tests pin the pure helpers; the wiring is exercised by every real
-bench run (BENCH_DETAIL_r07+ carries host_health + retimes fields)."""
+"""The bench contract: host health captured around the run, the one
+compact stdout line trimmed to the recorder's tail budget, and an
+end-to-end run that writes BENCH_DETAIL.json and nothing else."""
 
 from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import (  # noqa: E402
-    _best_known_medians,
+    COMPACT_LINE_BUDGET,
     _cpu_jiffies,
     _host_health,
-    _select_movers,
+    compact_line,
 )
 
 
@@ -47,100 +47,52 @@ def test_host_health_degrades_gracefully_without_proc():
     assert h == {"available": False, "wall_sec": 1.0}
 
 
-def test_best_known_medians_takes_minimum_across_archives(tmp_path):
-    for rnd, med in ((5, 1.0), (6, 2.0)):
-        with open(tmp_path / f"BENCH_DETAIL_r{rnd:02d}.json", "w") as fh:
-            json.dump(
-                {"timed_cache": "cold",
-                 "queries_detail": {"q01": {"median": med},
-                                    "q02": {"median": None}}}, fh,
-            )
-    # with < 3 archives the base is the plain MINIMUM, with its round
-    assert _best_known_medians(str(tmp_path), 7) == {"q01": (1.0, 5)}
-    # None medians are dropped; current/future rounds are excluded
-    assert _best_known_medians(str(tmp_path), 6) == {"q01": (1.0, 5)}
-    # no earlier archive -> empty base, retime pass becomes a no-op
-    assert _best_known_medians(str(tmp_path), 5) == {}
+def test_compact_line_queries_map_fits_tail_budget():
+    """The bench recorder's per-query comparator reads the ``queries``
+    map from the ONE stdout JSON line, but its tail capture keeps only
+    ~2000 bytes — the map must be trimmed to the largest medians until
+    the line fits (the full map lives in BENCH_DETAIL)."""
+    timings = {f"q{i:03d}_some_operator_name": 0.05 + i * 0.01
+               for i in range(202)}
+    timings["q999_failed"] = None
+    head = {"metric": "sparkdiff_total_query_time", "value": 123.4,
+            "unit": "sec", "sf": 0.1, "n_queries": 203, "n_errors": 1,
+            "n_runs": 3, "steal_pct": 0.1, "detail": "BENCH_DETAIL.json"}
+    # the untrimmed fleet overflows the budget, so trimming must happen
+    assert len(json.dumps({**head, "queries": timings})) > COMPACT_LINE_BUDGET
 
-
-def test_best_known_medians_robust_to_one_lucky_outlier(tmp_path):
-    """Round-9 advisor finding: the raw minimum of N noisy measurements
-    drifts downward as rounds accumulate, so ONE anomalously fast
-    archived median would brand a query a permanent mover.  With >= 3
-    archives the base is the median of the 3 smallest — a single lucky
-    0.1 s fluke among steady 2.0 s rounds must NOT set the base."""
-    meds = {1: 0.1, 2: 2.0, 3: 2.1, 4: 2.0}  # r1 is the fluke
-    for rnd, med in meds.items():
-        with open(tmp_path / f"BENCH_DETAIL_r{rnd:02d}.json", "w") as fh:
-            json.dump({"timed_cache": "cold",
-                       "queries_detail": {"q_x": {"median": med}}}, fh)
-    # 3 smallest = [0.1, 2.0(r2), 2.0(r4)] -> median = 2.0, set in r2
-    assert _best_known_medians(str(tmp_path), 5) == {"q_x": (2.0, 2)}
-    # a steady 2.2 s run is NOT a mover against the robust base
-    assert _select_movers({"q_x": 2.2}, _best_known_medians(str(tmp_path), 5)) == []
-
-
-def test_select_movers_catches_creeping_regression(tmp_path):
-    """Round-7 verdict #3: a query drifting 1.3x per round never crosses
-    the 1.5x trigger against the PREVIOUS round alone — against the
-    best-known base it must fire (the robust base delays the trigger by
-    at most one round vs the raw minimum, it cannot suppress it)."""
-    creep = [1.0, 1.3, 1.69]  # r1..r3 medians, 1.3x per round
-    for rnd, med in enumerate(creep, start=1):
-        with open(tmp_path / f"BENCH_DETAIL_r{rnd:02d}.json", "w") as fh:
-            json.dump({"timed_cache": "cold",
-                       "queries_detail": {"q_creep": {"median": med}}}, fh)
-    base = _best_known_medians(str(tmp_path), 4)
-    # robust base with 3 archives = median of the 3 smallest = r2's 1.3
-    assert base == {"q_creep": (1.3, 2)}
-    current = {"q_creep": 2.2}  # 1.3x vs r3 (under trigger), 1.69x vs base
-    assert current["q_creep"] < 1.5 * creep[-1], "sanity: prev-only misses"
-    movers = _select_movers(current, base)
-    assert len(movers) == 1 and movers[0][0] == "q_creep"
-    assert abs(movers[0][1] - 2.2 / 1.3) < 1e-9
-    # below the threshold vs best-known -> no retime
-    assert _select_movers({"q_creep": 1.4}, base) == []
-    # failed queries (None) and never-archived queries never fire
-    assert _select_movers({"q_creep": None, "q_new": 9.9}, base) == []
-
-
-def test_select_movers_caps_and_orders_worst_first():
-    base = {f"q{i:02d}": (1.0, 1) for i in range(20)}
-    timings = {f"q{i:02d}": 2.0 + i * 0.1 for i in range(20)}
-    movers = _select_movers(timings, base)
-    assert len(movers) == 10
-    assert movers[0][0] == "q19"  # worst ratio first
-    assert [r for _, r in movers] == sorted(
-        (r for _, r in movers), reverse=True
+    line = compact_line(head, timings)
+    assert len(line) <= COMPACT_LINE_BUDGET
+    parsed = json.loads(line)
+    qmap = parsed["queries"]
+    assert len(qmap) >= 40, "budget should fit at least the heavy tier"
+    assert parsed["n_queries_in_line"] == len(qmap)
+    assert "q999_failed" not in qmap
+    # the kept entries are exactly the largest medians
+    kept_min = min(qmap.values())
+    dropped_max = max(
+        round(t, 3) for n, t in timings.items()
+        if t is not None and n not in qmap
     )
+    assert kept_min >= dropped_max
+    # and the headline survives the trimming intact
+    assert {k: parsed[k] for k in head} == head
 
 
-def test_bench_retime_wiring_end_to_end(tmp_path):
-    """The full self-qualification loop in a sandboxed artifact dir:
-    a fabricated previous-round archive with tiny medians forces every
-    measured query to read as a >1.5x mover, so the end-of-run re-time
-    pass must fire and brand each with a verdict; host_health must be
-    present; the per-round archive must NOT be written by a partial
-    (SPARK_GRAFT_BENCH_ONLY) run."""
-    import subprocess
-
-    prev = {
-        "timed_cache": "cold",
-        "queries_detail": {
-            "q01_pricing_summary": {"median": 0.0001},
-            "q46_lineitem_diff": {"median": 0.0001},
-        }
-    }
-    with open(tmp_path / "BENCH_DETAIL_r06.json", "w") as fh:
-        json.dump(prev, fh)
+def test_bench_contract_end_to_end(tmp_path):
+    """A two-query bench in a sandboxed artifact dir: one stdout JSON
+    line within the tail budget carrying the fields the recorder parses,
+    host health in BENCH_DETAIL.json, ``SPARK_GRAFT_BENCH_N`` timed runs
+    per query, and no per-round archive file."""
+    n_runs = 2
+    names = ["q01_pricing_summary", "q46_lineitem_diff"]
     env = dict(
         os.environ,
         SPARKDIFF_BENCH_DIR=str(tmp_path),
-        SPARKDIFF_BENCH_ROUND="7",
         SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
         SPARK_GRAFT_CPUS="8",
-        SPARK_GRAFT_BENCH_N="1",
-        SPARK_GRAFT_BENCH_ONLY="q01_pricing_summary,q46_lineitem_diff",
+        SPARK_GRAFT_BENCH_N=str(n_runs),
+        SPARK_GRAFT_BENCH_ONLY=",".join(names),
     )
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     proc = subprocess.run(
@@ -148,185 +100,21 @@ def test_bench_retime_wiring_end_to_end(tmp_path):
         env=env, capture_output=True, text=True, timeout=420,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
-    compact = json.loads(proc.stdout.strip().splitlines()[-1])
-    assert compact["n_retimed"] == 2
-    assert compact["steal_pct"] is not None
-    # the run measures its own job-submission floor and the compact line
-    # carries the absorbed-verdict counts (round-9 #1 + advisor finding)
-    assert compact["floor_probe_sec"] > 0
-    assert compact["floor_ratio"] is not None
-    assert {"n_host_shift", "n_floor_shift"} <= set(compact)
+    lines = proc.stdout.strip().splitlines()
+    assert len(lines) == 1, proc.stdout[-2000:]
+    assert len(lines[0]) <= COMPACT_LINE_BUDGET
+    compact = json.loads(lines[0])
+    assert {"metric", "value", "unit", "sf", "queries", "n_queries",
+            "n_errors"} <= set(compact)
+    assert compact["sf"] == 0.001
+    assert compact["n_queries"] == 2 and compact["n_errors"] == 0
+    assert set(compact["queries"]) == set(names)
+
+    assert os.listdir(tmp_path) == ["BENCH_DETAIL.json"]
     with open(tmp_path / "BENCH_DETAIL.json") as fh:
         detail = json.load(fh)
     assert detail["host_health"]["available"] is True
-    # the retime pass re-probes the floor at retime time (the verdict
-    # comparator must be measured WITH the isolated re-times)
-    assert detail["floor_probe_retime_sec"] > 0
-    assert set(detail["retimes"]) == {
-        "q01_pricing_summary", "q46_lineitem_diff",
-    }
-    for r in detail["retimes"].values():
-        assert r["base_round"] == 6
-        assert r["verdict"] == "confirmed"  # vs a fabricated 0.1ms median
-        assert r["isolated_median"] > 0
-    # adjudicated total = official total with isolated medians
-    # substituted for every re-timed query (round-7 verdict #2)
-    expected = detail["value"] + sum(
-        r["isolated_median"] - detail["queries"][name]
-        for name, r in detail["retimes"].items()
-    )
-    assert abs(detail["adjudicated_value"] - expected) < 1e-6
-    assert abs(compact["adjudicated_value"] - expected) < 1e-6
-    # partial runs must not write the round archive
-    assert not (tmp_path / "BENCH_DETAIL_r07.json").exists()
-
-
-def test_median_ratio_vs_base_and_drift_verdicts():
-    from bench import _median_ratio_vs_base, _retime_verdict
-
-    base = {"a": (1.0, 1), "b": (2.0, 1), "c": (4.0, 1), "new": None}
-    # ratios: 1.3, 1.3, 1.3 -> uniform drift
-    assert _median_ratio_vs_base(
-        {"a": 1.3, "b": 2.6, "c": 5.2, "unseen": 9.9}, base
-    ) == 1.3
-    assert _median_ratio_vs_base({}, base) is None
-    # near best-known -> in-run noise regardless of drift
-    assert _retime_verdict(1.1, 1.3) == "noise"
-    # tracks the fleet's uniform drift -> host shift, not a regression
-    assert _retime_verdict(1.5, 1.3) == "host_shift"
-    # exceeds what drift explains -> real regression
-    assert _retime_verdict(2.0, 1.3) == "confirmed"
-    # no drift data or no uniform slowdown -> plain threshold
-    assert _retime_verdict(1.5, None) == "confirmed"
-    assert _retime_verdict(1.5, 1.0) == "confirmed"
-    # absurd "drift" (fabricated archives, broken host) must not
-    # absorb regressions -- the 3x cap falls through to confirmed
-    assert _retime_verdict(900.0, 1000.0) == "confirmed"
-
-
-def test_floor_shift_verdicts_class_aware():
-    """Round-9 verdict #1: a per-stage scheduling-cost shift moves
-    floor-dominated (stage-count-dominated tiny) queries 1.5-2x while
-    the scan-weighted fleet drift barely moves — those re-times must be
-    branded floor_shift, and scan-bound queries must never take the
-    branch (the dominance gate)."""
-    from bench import _retime_verdict
-
-    # the round-8 scenario: fleet drift 1.12, floor moved 1.9x, a tiny
-    # query's isolated re-time at 1.8x its best -> floor_shift
-    assert _retime_verdict(1.8, 1.12, 1.9, True) == "floor_shift"
-    # the SAME ratios on a scan-bound query (not floor-dominated) are a
-    # real regression: drift 1.12 doesn't explain 1.8x
-    assert _retime_verdict(1.8, 1.12, 1.9, False) == "confirmed"
-    # noise takes precedence: back near best-known is noise either way
-    assert _retime_verdict(1.1, 1.12, 1.9, True) == "noise"
-    # slowdown beyond what the floor shift explains -> confirmed
-    assert _retime_verdict(2.8, 1.12, 1.9, True) == "confirmed"
-    # no floor movement -> branch never fires
-    assert _retime_verdict(1.8, 1.12, 1.0, True) == "confirmed"
-    # absurd floor "shift" (> 3x cap) must not absorb regressions
-    assert _retime_verdict(4.0, 1.12, 5.0, True) == "confirmed"
-    # host_shift still reachable when floor doesn't explain but the
-    # fleet drift does
-    assert _retime_verdict(1.5, 1.3, 1.0, True) == "host_shift"
-
-
-def test_best_known_floor_fallback_and_minimum(tmp_path):
-    from bench import FLOOR_BASELINE_SEC, _best_known_floor
-
-    # no archives (or archives without a probe) -> measured bootstrap
-    assert _best_known_floor(str(tmp_path), 9) == (FLOOR_BASELINE_SEC, None)
-    with open(tmp_path / "BENCH_DETAIL_r07.json", "w") as fh:
-        json.dump({"queries_detail": {}}, fh)  # pre-probe archive
-    assert _best_known_floor(str(tmp_path), 9) == (FLOOR_BASELINE_SEC, None)
-    # archived probes -> minimum wins, future rounds excluded
-    with open(tmp_path / "BENCH_DETAIL_r08.json", "w") as fh:
-        json.dump({"floor_probe_sec": 0.08}, fh)
-    with open(tmp_path / "BENCH_DETAIL_r09.json", "w") as fh:
-        json.dump({"floor_probe_sec": 0.01}, fh)
-    assert _best_known_floor(str(tmp_path), 9) == (0.08, 8)
-    assert _best_known_floor(str(tmp_path), 10) == (0.01, 9)
-
-
-def test_best_known_medians_timed_cache_gate(tmp_path):
-    """Round-10: warm-cache archives (rounds <= 9, no ``timed_cache``
-    field) exclude persist materialization that a cold-cache run pays,
-    so they must NOT seed the comparison base — else every
-    persist-carrying query reads as a permanent regression."""
-    with open(tmp_path / "BENCH_DETAIL_r08.json", "w") as fh:
-        json.dump({"queries_detail": {"q_p": {"median": 0.1}}}, fh)  # warm
-    with open(tmp_path / "BENCH_DETAIL_r09.json", "w") as fh:
-        json.dump({"timed_cache": "warm",
-                   "queries_detail": {"q_p": {"median": 0.1}}}, fh)
-    assert _best_known_medians(str(tmp_path), 10) == {}
-    with open(tmp_path / "BENCH_DETAIL_r10.json", "w") as fh:
-        json.dump({"timed_cache": "cold",
-                   "queries_detail": {"q_p": {"median": 0.4}}}, fh)
-    assert _best_known_medians(str(tmp_path), 11) == {"q_p": (0.4, 10)}
-
-
-def test_best_known_floor_robust_to_one_fast_probe(tmp_path):
-    """Round-9 verdict #8: floor_ratio must be ~probe/base, and one
-    anomalously fast archived probe (r09's fully-JIT-warm retime read
-    0.017 s) must not pin the base once >= 3 probes exist — same
-    median-of-3-smallest rule as the query medians.  The floor probe
-    involves no caching, so warm archives still count."""
-    from bench import _best_known_floor
-
-    probes = {6: 0.017, 7: 0.08, 8: 0.075, 9: 0.081}  # r6 is the fluke
-    for rnd, p in probes.items():
-        with open(tmp_path / f"BENCH_DETAIL_r{rnd:02d}.json", "w") as fh:
-            json.dump({"floor_probe_sec": p}, fh)
-    base, base_rnd = _best_known_floor(str(tmp_path), 10)
-    # 3 smallest = [0.017, 0.075, 0.08] -> median 0.075 (r8)
-    assert (base, base_rnd) == (0.075, 8)
-    # a healthy 0.08 s probe now reads ~1.07, not 4.7 (vs the fluke)
-    assert 1.0 < round(0.08 / base, 2) < 1.25
-    # with < 3 probes the plain minimum still applies
-    with open(tmp_path / "BENCH_DETAIL_r08.json", "w") as fh:
-        json.dump({}, fh)
-    with open(tmp_path / "BENCH_DETAIL_r09.json", "w") as fh:
-        json.dump({}, fh)
-    assert _best_known_floor(str(tmp_path), 8) == (0.017, 6)
-
-
-def test_compact_line_queries_map_fits_tail_budget():
-    """Round-9 verdict #2: the driver's per-query comparator reads the
-    ``queries`` map from the ONE stdout JSON line, but its tail capture
-    keeps only ~2000 bytes — the map must be trimmed to the largest
-    medians until the line fits (the full map lives in BENCH_DETAIL)."""
-    from bench import COMPACT_LINE_BUDGET
-
-    # mirror bench.main()'s trimming logic on a 202-query fleet
-    timings = {f"q{i:03d}_some_operator_name": 0.05 + i * 0.01
-               for i in range(202)}
-    compact = {"metric": "sparkdiff_total_query_time", "value": 123.4,
-               "adjudicated_value": 123.4, "unit": "sec", "sf": 0.1,
-               "queries": {}, "n_queries": 202, "n_errors": 0,
-               "n_runs": 3, "steal_pct": 0.1, "drift_vs_best": 1.0,
-               "floor_probe_sec": 0.07, "floor_ratio": 1.0,
-               "n_retimed": 0, "n_confirmed_regressions": 0,
-               "n_host_shift": 0, "n_floor_shift": 0,
-               "detail": "BENCH_DETAIL.json"}
-    qmap = {n: round(t, 3) for n, t in timings.items()}
-    compact["queries"] = qmap
-    compact["n_queries_in_line"] = len(qmap)
-    assert len(json.dumps(compact)) > COMPACT_LINE_BUDGET  # needs trimming
-    for n in sorted(qmap, key=qmap.get):
-        if len(json.dumps(compact)) <= COMPACT_LINE_BUDGET:
-            break
-        del qmap[n]
-    compact["n_queries_in_line"] = len(qmap)
-    line = json.dumps(compact)
-    assert len(line) <= COMPACT_LINE_BUDGET
-    assert len(qmap) >= 40, "budget should fit at least the heavy tier"
-    # the kept entries are exactly the largest medians
-    kept_min = min(qmap.values())
-    dropped_max = max(
-        (round(t, 3) for n, t in timings.items() if n not in qmap),
-        default=0.0,
-    )
-    assert kept_min >= dropped_max
-    # and the line round-trips with the headline intact
-    parsed = json.loads(line)
-    assert parsed["value"] == 123.4 and parsed["queries"] == qmap
+    assert set(detail["queries_detail"]) == set(names)
+    for d in detail["queries_detail"].values():
+        assert len(d["runs"]) == n_runs
+        assert d["min"] <= d["median"]

@@ -85,13 +85,17 @@ def test_pii_alternation_equals_per_pattern_count_sum(tricky):
         "|".join(f"(?:{pat})" for _, pat, _ in PII_PATTERNS)
     )
     # the production form (queries._funnel_flags) coalesces to false on
-    # NULL text, matching the old Σ-counts form's false (size(NULL)=-1)
+    # NULL text; the Σ-counts form is NULL there (size(NULL) is NULL
+    # unless the legacy sizeOfNull setting is on), so the NULL row is
+    # pinned on its own and the two forms are compared on the rest
     rows = tricky.select(
+        "text",
         (pii_total == 0).alias("a"),
         F.coalesce(~pii_any, F.lit(False)).alias("b"),
     ).collect()
-    assert all(r.a == r.b for r in rows), [
-        (r.a, r.b) for r in rows if r.a != r.b
+    assert [r.b for r in rows if r.text is None] == [False]
+    assert all(r.a == r.b for r in rows if r.text is not None), [
+        (r.a, r.b) for r in rows if r.text is not None and r.a != r.b
     ]
 
 
