@@ -20,11 +20,13 @@ Measurement model, per query:
   run pays its persists' materialization once and reuses it within the
   run.  The rebuild matters: after clearCache alone the old plan has no
   cache registrations and recomputes shared subtrees per consumer.
-  Only the noop-sink action is timed, plan construction is not
+  The noop-sink action is what ``runs`` and the headline measure; plan
+  construction (eager probes included) is timed separately
   (``_timed_cold_runs``);
-- ``runs``, ``median``, ``min``, ``rows``, ``rows_per_sec`` and
-  ``steal_pct`` (the CPU steal of that query's own measurement window)
-  in BENCH_DETAIL.json ``queries_detail``.
+- ``runs``, ``median``, ``min``, ``construct_sec`` (median plan
+  construction), ``rows``, ``rows_per_sec`` and ``steal_pct`` (the CPU
+  steal of that query's own measurement window) in BENCH_DETAIL.json
+  ``queries_detail``.
 
 The run-level ``host_health`` block records /proc/stat steal, iowait and
 busy percentages across the whole sweep: steal_pct above ~1% means the
@@ -60,19 +62,25 @@ from sparkdiff.session import get_spark  # noqa: E402
 COMPACT_LINE_BUDGET = 1900
 
 
-def _timed_cold_runs(spark, fn, sf_dir: str, n_runs: int) -> list[float]:
+def _timed_cold_runs(
+    spark, fn, sf_dir: str, n_runs: int
+) -> tuple[list[float], list[float]]:
     """The round-10 timed region: per run, drop every cached table and
     rebuild the plan (re-registering its persists), then time one noop
-    save.  Construction stays untimed — the convention every archived
-    round used (eager probes included); only the action is measured."""
+    save.  Returns ``(runs, constructs)``: the action times, which are
+    the reported runs, and the plan-construction times (eager probes
+    included), which are recorded beside them."""
     runs: list[float] = []
+    constructs: list[float] = []
     for _ in range(n_runs):
         spark.catalog.clearCache()
-        df = fn(spark, sf_dir)
         t0 = time.perf_counter()
+        df = fn(spark, sf_dir)
+        t1 = time.perf_counter()
         df.write.format("noop").mode("overwrite").save()
-        runs.append(round(time.perf_counter() - t0, 4))
-    return runs
+        runs.append(round(time.perf_counter() - t1, 4))
+        constructs.append(round(t1 - t0, 4))
+    return runs, constructs
 
 
 def _cpu_jiffies() -> dict[str, int] | None:
@@ -174,7 +182,7 @@ def main() -> None:
             # cold-cache timed runs (round-9 verdict #1): each run pays
             # its persists' materialization; noop sink forces full
             # evaluation without driver collect cost (guide §1.4)
-            runs = _timed_cold_runs(spark, fn, sf_dir, n_runs)
+            runs, constructs = _timed_cold_runs(spark, fn, sf_dir, n_runs)
             med = round(statistics.median(runs), 4)
             rows = df.count()
         except Exception as exc:  # noqa: BLE001 — harness must survive
@@ -187,6 +195,7 @@ def main() -> None:
         detail[name] = {
             "runs": runs,
             "median": med,
+            "construct_sec": round(statistics.median(constructs), 4),
             "min": round(min(runs), 4),
             "rows": rows,
             "rows_per_sec": round(rows / med, 1) if med > 0 else None,

@@ -185,39 +185,35 @@ def minhash_signatures_from_exploded(
     value-identical to re-exploding the per-document shingle sets —
     round 10, guide §5/§2.4: one explode+hash pass instead of two.
     :func:`minhash_signatures` is exactly explode → this."""
-    h = F.pmod(token_hash(token_col, hash_method), F.lit(MERSENNE_PRIME))
+    # Hash each token once into a projected column, then emit the
+    # num_perm aggregates as SQL text: built Column-by-Column they cost
+    # ~50 Py4J round trips each at plan construction, as text ~4
+    # (SCALE.md hazard #8).
+    p = MERSENNE_PRIME
+    hashed = toks.select(
+        F.col(id_col).alias("_id"),
+        F.pmod(token_hash(token_col, hash_method), F.lit(p)).alias("_h"),
+    )
     aggs = [
-        F.min(F.pmod(h * F.lit(a) + F.lit(b), F.lit(MERSENNE_PRIME))).alias(f"m{j}")
+        F.expr(f"min(pmod(_h * {a} + {b}, {p})) AS m{j}")
         for j, (a, b) in enumerate(_lcg_coefficients(num_perm))
     ]
-    return toks.groupBy(F.col(id_col).alias("_id")).agg(*aggs)
+    return hashed.groupBy("_id").agg(*aggs)
 
 
 def _band_keys(sig: DataFrame, bands: int, rows: int) -> DataFrame:
     """``(_id, band, key)`` rows from a signature frame: split into
-    ``bands`` bands of ``rows`` values, md5 band key, explode."""
-    return sig.select(
-        "_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.md5(
-                            F.concat_ws(
-                                ",",
-                                *[
-                                    F.col(f"m{i * rows + j}").cast("string")
-                                    for j in range(rows)
-                                ],
-                            )
-                        ).alias("key"),
-                    )
-                    for i in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("_id", "bk.band", "bk.key")
+    ``bands`` bands of ``rows`` values, md5 band key, explode.  One
+    ``selectExpr`` of generated SQL text (see SCALE.md hazard #8)."""
+    structs = ", ".join(
+        f"named_struct('band', {i}, 'key', md5(concat_ws(',', "
+        + ", ".join(f"CAST(m{i * rows + j} AS STRING)" for j in range(rows))
+        + ")))"
+        for i in range(bands)
+    )
+    return sig.selectExpr("_id", f"explode(array({structs})) AS bk").select(
+        "_id", "bk.band", "bk.key"
+    )
 
 
 def minhash_lsh_candidates(

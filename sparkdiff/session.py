@@ -28,6 +28,9 @@ TESTDATA_TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+#: The directory that holds the ``sparkdiff`` package.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "sparkdiff",
@@ -69,6 +72,15 @@ def get_spark(
         # [12.3, 7.3, 1.0]).  Drive GC deterministically BETWEEN units
         # of work instead, as bench.py does every 20 queries.
         .config("spark.ui.enabled", "false")
+        # PySpark's DataFrame-debugging wrapper walks the Python stack
+        # and makes extra Py4J calls on every F.* / Column call to
+        # record its call site for error contexts (F.col: 13 calls with
+        # it, 3 without); nothing here reads that context, and plan
+        # construction pays for it per call (SCALE.md hazard #8).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Python workers import ``sparkdiff`` (pickled UDFs, broadcasts)
+        # whatever the driver's working directory is.
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -1,6 +1,7 @@
 """The bench contract: host health captured around the run, the one
-compact stdout line trimmed to the recorder's tail budget, and an
-end-to-end run that writes BENCH_DETAIL.json and nothing else."""
+compact stdout line trimmed to the recorder's tail budget, an
+end-to-end run that writes BENCH_DETAIL.json and nothing else, and a
+run started outside the repository root."""
 
 from __future__ import annotations
 
@@ -118,3 +119,31 @@ def test_bench_contract_end_to_end(tmp_path):
     for d in detail["queries_detail"].values():
         assert len(d["runs"]) == n_runs
         assert d["min"] <= d["median"]
+        # plan construction is recorded beside, not inside, the runs
+        assert isinstance(d["construct_sec"], float) and d["construct_sec"] > 0
+
+
+def test_bench_python_workers_import_package_outside_repo_root(tmp_path):
+    """Started from a directory outside the repository, the Python
+    workers must still import ``sparkdiff``: q134 unpickles a broadcast
+    automaton whose class lives in the package."""
+    from .conftest import SF_DIR_SMALL
+
+    env = dict(
+        os.environ,
+        SPARKDIFF_BENCH_DIR=str(tmp_path),
+        SPARK_GRAFT_SF_DIR=SF_DIR_SMALL,
+        SPARK_GRAFT_CPUS="4",
+        SPARK_GRAFT_BENCH_N="1",
+        SPARK_GRAFT_BENCH_ONLY="q134_exact_contamination",
+    )
+    env.pop("PYTHONPATH", None)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, os.path.join(repo, "bench.py")],
+        env=env, cwd=tmp_path, capture_output=True, text=True, timeout=420,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    compact = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert compact["n_queries"] == 1
+    assert compact["n_errors"] == 0, proc.stderr[-2000:]

@@ -4,6 +4,7 @@ locality of the fingerprints."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from sparkdiff.functions.text import tokens
@@ -734,3 +735,160 @@ def test_embedding_cross_matches_finds_planted_probe(spark):
     ).collect()
     assert {(r.corpus_id, r.probe_id) for r in got} == {(3, 100)}
     assert got[0].cosine > 0.999
+
+
+# A small fixture for the MinHash bit pin: an empty doc, a doc shorter
+# than k tokens, and docs whose tokens and shingles repeat.
+_PIN_DOCS = [
+    (1, ""),
+    (2, "alpha beta"),
+    (3, "gamma gamma gamma delta gamma gamma"),
+    (4, "the cat sat on the mat and the cat sat on the hat"),
+]
+_PIN_SHINGLES = {
+    1: set(),
+    2: {"alpha beta"},
+    3: {"gamma gamma gamma", "gamma gamma delta", "gamma delta gamma",
+        "delta gamma gamma"},
+    4: {"the cat sat", "cat sat on", "sat on the", "on the mat",
+        "the mat and", "mat and the", "and the cat", "on the hat"},
+}
+
+
+def _reference_token_hashes(spark, toks, method):
+    """Per-token integer hash, computed outside the operator: md5's first
+    15 hex digits via hashlib; xxhash64 via Spark's builtin, per token
+    (no Python xxhash module to compare against)."""
+    import hashlib
+
+    if method == "md5":
+        return {
+            t: int(hashlib.md5(t.encode()).hexdigest()[:15], 16) for t in toks
+        }
+    df = spark.createDataFrame([(t,) for t in sorted(toks)], "t string")
+    return {r.t: r.h for r in df.select("t", F.xxhash64("t").alias("h")).collect()}
+
+
+def _reference_signature(hashes, coeffs, p):
+    return [min((a * (h % p) + b) % p for h in hashes) for a, b in coeffs]
+
+
+@pytest.mark.parametrize("method", ["md5", "xxhash64"])
+def test_minhash_and_band_keys_match_python_reference(spark, method):
+    """``minhash_signatures`` and ``band_keys_from_shingles`` are pinned
+    bit for bit to a Python reference of the documented math: signature
+    ``min((a*(h % p) + b) % p)`` over ``_lcg_coefficients``, band key
+    ``md5(",".join(str(m) ...))``.  Nothing else pins the xxhash64 mode,
+    which has no DuckDB twin."""
+    import hashlib
+
+    from pyspark.sql.types import (
+        IntegerType,
+        LongType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    from sparkdiff.operators.dedup import (
+        MERSENNE_PRIME,
+        _lcg_coefficients,
+        _shingle_sets,
+        band_keys_from_shingles,
+        minhash_signatures,
+    )
+
+    num_perm, bands = 64, 16  # the production defaults
+    rows = num_perm // bands
+    coeffs = _lcg_coefficients(num_perm)
+    docs = spark.createDataFrame(_PIN_DOCS, "doc_id long, text string")
+    sh = _shingle_sets(docs, "doc_id", "text", k=3)
+    got_sets = {r["_id"]: set(r["_sh"]) for r in sh.collect()}
+    assert got_sets == _PIN_SHINGLES
+
+    all_shingles = set().union(*_PIN_SHINGLES.values())
+    th = _reference_token_hashes(spark, all_shingles, method)
+    want_sig = {
+        i: _reference_signature([th[s] for s in ss], coeffs, MERSENNE_PRIME)
+        for i, ss in _PIN_SHINGLES.items()
+        if ss  # a shingle-free doc has no signature row
+    }
+
+    sig = minhash_signatures(sh, "_id", F.col("_sh"), num_perm, method)
+    assert sig.schema == StructType(
+        [StructField("_id", LongType(), True)]
+        + [StructField(f"m{j}", LongType(), True) for j in range(num_perm)]
+    )
+    got_sig = {
+        r["_id"]: [r[f"m{j}"] for j in range(num_perm)] for r in sig.collect()
+    }
+    assert got_sig == want_sig
+
+    bk = band_keys_from_shingles(sh, num_perm, bands, method)
+    assert bk.schema == StructType(
+        [
+            StructField("_id", LongType(), True),
+            StructField("band", IntegerType(), False),
+            StructField("key", StringType(), False),
+        ]
+    )
+    want_bk = sorted(
+        (
+            i,
+            b,
+            hashlib.md5(
+                ",".join(str(m) for m in s[b * rows:(b + 1) * rows]).encode()
+            ).hexdigest(),
+        )
+        for i, s in want_sig.items()
+        for b in range(bands)
+    )
+    assert sorted(map(tuple, bk.collect())) == want_bk
+
+    # repeated tokens in a raw token array count once
+    toks = spark.createDataFrame(
+        [(7, ["x", "y", "x", "x"]), (8, [])], "doc_id long, toks array<string>"
+    )
+    th_xy = _reference_token_hashes(spark, {"x", "y"}, method)
+    got = {
+        r["_id"]: [r[f"m{j}"] for j in range(num_perm)]
+        for r in minhash_signatures(
+            toks, "doc_id", F.col("toks"), num_perm, method
+        ).collect()
+    }
+    assert got == {
+        7: _reference_signature(list(th_xy.values()), coeffs, MERSENNE_PRIME)
+    }
+
+
+def test_corpus_dedup_index_construction_py4j_calls(spark):
+    """Constructing the corpus index is a driver-side cost paid per
+    ingest gate: its 64 MinHash aggregates and 16 band keys are built as
+    SQL text, not Column by Column, and the session skips PySpark's
+    per-call call-site capture.  Built Column by Column with call-site
+    capture on, the same construction made ~5,900 Py4J calls; a count
+    does not flake the way a time would.  Object releases are left out:
+    a background thread sends them whenever earlier objects die."""
+    from py4j.protocol import MEMORY_COMMAND_NAME
+
+    from sparkdiff.operators.dedup import corpus_dedup_index
+
+    docs = load_table(spark, SF_DIR_SMALL, "documents").select("doc_id", "text")
+    corpus_dedup_index(docs, "doc_id", "text")  # first build may infer types
+    client_cls = type(spark.sparkContext._gateway._gateway_client)
+    orig = client_cls.send_command
+    calls = 0
+
+    def counting(self, command, *args, **kwargs):
+        nonlocal calls
+        if not command.startswith(MEMORY_COMMAND_NAME):
+            calls += 1
+        return orig(self, command, *args, **kwargs)
+
+    client_cls.send_command = counting
+    try:
+        index = corpus_dedup_index(docs, "doc_id", "text")
+    finally:
+        client_cls.send_command = orig
+    assert len(index) == 2
+    assert calls <= 1000, f"{calls} Py4J calls to construct corpus_dedup_index"

@@ -8,14 +8,15 @@ PushedFilters, BatchEvalPython nodes).
 
 Usage::
 
-    python tools/plan_dump.py before q164_kmv_set_ops q147_source_overlap
-    python tools/plan_dump.py after q164_kmv_set_ops
+    python tools/plan_dump.py plans/r09 before q164_kmv_set_ops q147_source_overlap
+    python tools/plan_dump.py plans/r09 after q164_kmv_set_ops
 
-Writes ``plans/r<N>/<query>_<tag>.txt`` (N from $SPARKDIFF_BENCH_ROUND,
-default 9).  Plans are captured at $SPARK_GRAFT_SF_DIR (default sf0.1 —
-the bench's scale) with the same session factory the bench uses, so the
-committed plan is the one the timed run executes (modulo AQE runtime
-re-optimization, which `explain` shows as isFinalPlan=false).
+Writes ``<out_dir>/<query>_<tag>.txt``; a relative ``out_dir`` is taken
+from the current directory.  Plans are captured at $SPARK_GRAFT_SF_DIR
+(default sf0.1 — the bench's scale) with the same session factory the
+bench uses, so the committed plan is the one the timed run executes
+(modulo AQE runtime re-optimization, which `explain` shows as
+isFinalPlan=false).
 """
 
 from __future__ import annotations
@@ -33,12 +34,10 @@ from sparkdiff.session import get_spark  # noqa: E402
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
-    assert tag and names, "usage: plan_dump.py <tag> <query> [query ...]"
+    if len(sys.argv) < 4:
+        sys.exit("usage: plan_dump.py <out_dir> <tag> <query> [query ...]")
+    out_dir, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    rnd = int(os.environ.get("SPARKDIFF_BENCH_ROUND", "9"))
-    out_dir = os.path.join(REPO, "plans", f"r{rnd:02d}")
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("sparkdiff-plan-dump")
     for name in names:
@@ -54,7 +53,7 @@ def main() -> None:
             f"{name}_{tag}: exchanges={plan.count('Exchange ')} "
             f"smj={plan.count('SortMergeJoin')} bhj={plan.count('BroadcastHashJoin')} "
             f"python={plan.count('EvalPython') + plan.count('MapInPandas') + plan.count('MapInArrow')} "
-            f"-> {os.path.relpath(path, REPO)}"
+            f"-> {path}"
         )
         spark.catalog.clearCache()
     spark.stop()
