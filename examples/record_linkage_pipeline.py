@@ -64,13 +64,15 @@ def main(sf_dir: str) -> None:
     n_injected = dirty.count()
     print(f"-> corpus: {customers.count()} rows ({n_injected} injected dups)")
 
-    # 2. block
+    # 2. block — the variant explode is heavy per row, so spread the
+    # in-memory frame over every core first
     cand = edit_distance_join(
-        customers.select("id", "c_name"),
+        customers.select("id", "c_name").repartition(
+            spark.sparkContext.defaultParallelism
+        ),
         "id",
         "c_name",
         d=1,
-        parallelism=spark.sparkContext.defaultParallelism,
     )
     print(f"-> blocking: {cand.count()} ed<=1 candidate pairs")
 

@@ -260,7 +260,6 @@ def near_dup_pairs(
     bands: int = 16,
     hash_method: str = "xxhash64",
     tokens_col: str | None = None,
-    parallelism: int | None = None,
 ) -> DataFrame:
     """MinHash-LSH near-dup detection with exact-Jaccard verification:
     ``(id_a, id_b, jaccard)`` for shingle-Jaccard ≥ threshold.
@@ -268,15 +267,7 @@ def near_dup_pairs(
     ``tokens_col`` names an already-materialized token-array column to
     shingle from, skipping the tokenizer — the hook that lets a
     multi-branch pipeline (e.g. q68) tokenize its corpus ONCE and share
-    the projection across dedup/decontamination/quality branches.
-
-    ``parallelism``: repartition the doc projection before the
-    tokenize→shingle→64-hash-signature fan-out — when the input is a
-    FEW splits (one small parquet file), that per-row work otherwise
-    serializes into one task (the substring.py convention; round 9).
-    Leave None when the input already has scan parallelism."""
-    if parallelism:
-        df = df.repartition(parallelism)
+    the projection across dedup/decontamination/quality branches."""
     if tokens_col is not None:
         shingled = df.withColumn(
             "_shg", word_shingles_from_tokens(F.col(tokens_col), k)
@@ -544,7 +535,6 @@ def incremental_near_dup_pairs(
     persist_batch: bool = True,
     batch_shingles: DataFrame | None = None,
     batch_band_keys: DataFrame | None = None,
-    parallelism: int | None = None,
 ) -> DataFrame:
     """Asymmetric near-dup: which NEW-batch docs near-duplicate the
     EXISTING corpus — the ingest-time dedup gate every continuously-fed
@@ -581,16 +571,6 @@ def incremental_near_dup_pairs(
     """
     assert num_perm % bands == 0
     rows = num_perm // bands
-    if parallelism:
-        # repartition BEFORE the shingle→MinHash fan-out (the shuffle
-        # carries raw text/token arrays once; the per-row signature work
-        # then runs wide — the near_dup_pairs convention; round 9).
-        # Only inline-built inputs: a caller-supplied corpus_index /
-        # batch_shingles owns its own layout.
-        if corpus is not None and corpus_index is None:
-            corpus = corpus.repartition(parallelism)
-        if batch_shingles is None:
-            batch = batch.repartition(parallelism)
     if corpus_index is None:
         if corpus is None:
             raise ValueError("need either corpus or corpus_index")
@@ -647,7 +627,6 @@ def simhash64(
     id_col: str,
     tokens_col: Column,
     hash_method: str = "xxhash64",
-    parallelism: int | None = None,
 ) -> DataFrame:
     """64-bit SimHash per document: ``(id, simhash long)``.
 
@@ -656,15 +635,7 @@ def simhash64(
     with no tokens get simhash 0.  With ``hash_method='md5'`` the token
     hash carries 60 bits, so bits 60-63 are always 0 — an
     oracle-checkable fingerprint with marginally coarser locality.
-
-    ``parallelism``: repartition ``df`` before the explode → per-token
-    hash fan-out — on a single-split scan that per-token work (64 bit
-    probes per token, and the md5 mode's digest+conv chain) otherwise
-    serializes into one task (the near_dup_pairs convention; round 9).
-    Leave None when the input already has scan parallelism.
     """
-    if parallelism:
-        df = df.repartition(parallelism)
     toks = df.select(F.col(id_col).alias("_id"), F.explode(tokens_col).alias("_t"))
     h = token_hash("_t", hash_method)
     votes = toks.groupBy("_id").agg(
@@ -900,7 +871,6 @@ def containment_join(
     threshold_den: int,
     id_col: str = "doc_id",
     set_col: str = "s",
-    parallelism: int | None = None,
 ) -> DataFrame:
     """EXACT threshold set-CONTAINMENT self-join: all ORDERED pairs
     ``(id_a != id_b)`` with ``|A ∩ B| / |A| >= t`` — the asymmetric
@@ -930,11 +900,7 @@ def containment_join(
     The distinct-set table feeds FOUR consumers (frequency table,
     ranked prefix, index side, both verify sides), so it is persisted
     for the returned DAG's lifetime — the q25/q26 multi-consumer
-    convention (release path: session ``clearCache``).
-    ``parallelism``: repartition before the set materialization when
-    the input is a few splits (the substring.py convention) — the
-    per-row set work otherwise serializes into one task per input
-    file."""
+    convention (release path: session ``clearCache``)."""
     from pyspark.sql import Window
     from pyspark.storagelevel import StorageLevel
 
@@ -943,11 +909,8 @@ def containment_join(
             f"threshold must be in (0, 1]: {threshold_num}/{threshold_den}"
         )
     num, den = threshold_num, threshold_den
-    pre = sets
-    if parallelism:
-        pre = pre.repartition(parallelism)
     base = (
-        pre.select(
+        sets.select(
             F.col(id_col).alias("_id"),
             F.array_distinct(F.col(set_col)).alias("_s"),
         )

@@ -77,24 +77,15 @@ def edit_distance_join(
     id_col: str,
     str_col: str,
     d: int = 1,
-    parallelism: int | None = None,
 ) -> DataFrame:
     """All pairs ``(id_a, id_b, dist)`` with ``id_a < id_b`` and
     ``levenshtein <= d``, via deletion-neighborhood candidates + exact
     verify.  Exact (no false negatives): neighborhood intersection is
     implied by ed <= d; hash collisions and residual false candidates
-    die at the levenshtein verify.
-
-    ``parallelism``: the explode amplifies each row into ~len^d variant
-    rows — when the input is a FEW splits (one small parquet file),
-    that work serializes into one task unless the projection is
-    repartitioned first (the substring.py convention).  Leave None when
-    the input already has scan parallelism."""
+    die at the levenshtein verify."""
     base = df.select(
         F.col(id_col).alias("_edj_id"), F.col(str_col).alias("_edj_s")
     )
-    if parallelism:
-        base = base.repartition(parallelism)
     # persisted: BOTH candidate self-join sides consume the variant
     # table — unpersisted, each side re-runs the ~len^d-amplified
     # deletion-neighborhood explode over the corpus (round 9; guide

@@ -61,26 +61,14 @@ def unique(cols: list[str]) -> tuple[str, str, None]:
     return (f"unique({','.join(cols)})", ",".join(cols), None)
 
 
-def expectation_report(
-    df: DataFrame, checks: list[tuple], parallelism: int | None = None
-) -> DataFrame:
+def expectation_report(df: DataFrame, checks: list[tuple]) -> DataFrame:
     """Evaluate all checks in one aggregation pass: ``(check, column,
     n_rows, n_violations, ok)`` — one row per check, insertion order
     irrelevant (the report is a set).  Row-level checks sum their
     violation flags; ``unique`` checks count surplus rows via distinct
-    counts in the SAME aggregate.
-
-    ``parallelism``: repartition before the aggregate — ``unique``
-    checks make Catalyst plan an Expand (one duplicated pass per
-    distinct-count group), and when the input is a FEW splits that
-    multiplied pass serializes into one task (the substring.py
-    convention; round 9).  Leave None when the input already has scan
-    parallelism; column pruning passes through the repartition, so the
-    shuffle carries only check-referenced columns."""
+    counts in the SAME aggregate."""
     if not checks:
         raise ValueError("expectation_report needs at least one check")
-    if parallelism:
-        df = df.repartition(parallelism)
     aggs = [F.count(F.lit(1)).cast("long").alias("_n")]
     for i, (_name, target, flag) in enumerate(checks):
         if flag is None:

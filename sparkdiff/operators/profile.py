@@ -85,7 +85,6 @@ def profile_table(
     columns: list[str] | None = None,
     exact_ndv: bool = True,
     ndv_encoding: str = "typed",
-    parallelism: int | None = None,
 ) -> DataFrame:
     """Profile ``columns`` (default: every non-complex column) in one
     aggregation pass; returns one row per column:
@@ -112,13 +111,6 @@ def profile_table(
       given the data).  Opt in where that contract is acceptable
       (q107's drift probe does); the default stays injective.
     """
-    # ``parallelism``: repartition before the aggregates — the base
-    # min/max/count pass and the melt-NDV pass both do their heavy
-    # map-side work wherever the scan put the rows, and a single-file
-    # input serializes them into one task (round 9; the substring.py
-    # convention).  Leave None when the input already has parallelism.
-    if parallelism:
-        df = df.repartition(parallelism)
     dtypes = dict(zip(df.schema.names, [f.dataType for f in df.schema.fields]))
     if columns is None:
         columns = [

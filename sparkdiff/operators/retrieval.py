@@ -84,7 +84,6 @@ def kmeans_assign(
     iters: int = 2,
     with_centroids: bool = False,
     dim: int | None = None,
-    parallelism: int | None = None,
 ) -> DataFrame:
     """Deterministic distributed Lloyd: seeds are the k smallest ids,
     runs ``iters`` assignment/update rounds, returns the final
@@ -118,14 +117,9 @@ def kmeans_assign(
         F.col(id_col).alias("_id"),
         F.col(vec_col).cast("array<double>").alias("_v"),
     )
-    # ``parallelism``: repartition before the Lloyd rounds — every
-    # round's broadcast-assignment map work runs wherever the scan put
-    # the rows, and a single-file vector table serializes it into one
-    # task (round 9; the substring.py convention).  ``dim``: when the
-    # dimension is known, use the whole-stage-codegen'd flat distance
-    # (bit-identical fold order) instead of the CodegenFallback HOF.
-    if parallelism:
-        e = e.repartition(parallelism)
+    # ``dim``: when the dimension is known, use the whole-stage-codegen'd
+    # flat distance (bit-identical fold order) instead of the
+    # CodegenFallback HOF.
     _dist = (
         (lambda a, b: squared_l2_flat(a, b, dim))
         if dim
@@ -439,7 +433,6 @@ def ivf_topk_deterministic(
     top_k: int = 3,
     query_pred=None,
     dim: int | None = None,
-    parallelism: int | None = None,
 ) -> DataFrame:
     """Oracle-replayable IVF nearest-neighbor search: the
     :func:`kmeans_assign` Lloyd loop partitions the corpus into
@@ -463,11 +456,8 @@ def ivf_topk_deterministic(
         F.col(id_col).alias("_id"),
         F.col(vec_col).cast("array<double>").alias("_v"),
     )
-    # same two knobs as kmeans_assign (round 9): repartition a
-    # single-file vector table before the per-round map work; use the
-    # codegen'd flat distance when the dimension is known
-    if parallelism:
-        e = e.repartition(parallelism)
+    # as in kmeans_assign: the codegen'd flat distance when the
+    # dimension is known
     _dist = (
         (lambda a, b: squared_l2_flat(a, b, dim))
         if dim
@@ -572,7 +562,6 @@ def pq_encode(
     sub_dim: int = 16,
     k: int = 4,
     iters: int = 2,
-    parallelism: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Product quantization (Jégou et al. 2011, TPAMI): split each
     vector into ``m`` contiguous ``sub_dim``-dim subvectors and cluster
@@ -604,8 +593,7 @@ def pq_encode(
             F.col("_pqid").alias(id_col),
             F.slice("_pqv", s * sub_dim + 1, sub_dim).alias("_sv"),
         )
-        # sub_dim is known -> codegen'd flat distance; parallelism
-        # forwarded so a single-file vector table trains wide (round 9)
+        # sub_dim is known -> codegen'd flat distance
         a, c = kmeans_assign(
             sub,
             id_col,
@@ -614,7 +602,6 @@ def pq_encode(
             iters=iters,
             with_centroids=True,
             dim=sub_dim,
-            parallelism=parallelism,
         )
         cs = a.select(
             id_col, F.lit(s).alias("sub"), F.col("cluster").alias("code")

@@ -64,23 +64,13 @@ def _seed_positions(
     id_col: str,
     text_col: str,
     min_len: int,
-    parallelism: int | None = None,
 ) -> DataFrame:
     """One row per stride-1 seed position: ``(_id, _p, _h)`` with
     ``_h`` the xxhash64 of the length-``min_len`` gram starting at
     1-based ``_p`` (identity proxy only — see module doc).  Documents
     shorter than ``min_len`` contribute nothing (the guard matters:
-    Spark's ``sequence(1, 0)`` would count DOWN, not return empty).
-
-    ``parallelism``: the explode amplifies each doc row into ~doc_len
-    position rows and each position pays a substr+hash — when the input is a
-    FEW splits (one small parquet file), that work serializes into one
-    task unless the doc projection is repartitioned first.  Leave None
-    when the input already has scan parallelism (any real multi-file
-    corpus): the extra doc shuffle buys nothing there."""
+    Spark's ``sequence(1, 0)`` would count DOWN, not return empty)."""
     base = docs.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
-    if parallelism:
-        base = base.repartition(parallelism)
     t, n = F.col("_t"), F.length("_t")
     seq = F.when(
         n >= min_len, F.sequence(F.lit(1), n - min_len + 1)
@@ -102,7 +92,6 @@ def repeated_spans(
     id_col: str = "doc_id",
     text_col: str = "text",
     keep_first: bool = False,
-    parallelism: int | None = None,
 ) -> DataFrame:
     """Maximal repeated spans per document: ``(id_col, span_start,
     span_end, n_seeds)`` with 1-based inclusive bounds.
@@ -127,7 +116,7 @@ def repeated_spans(
     # back; persist it so the 35x-amplified explode+md5 runs once (the
     # q26/q83 persisted-shingle-table convention — corpus-linear, and
     # recomputing it costs more than storing it)
-    pos = _seed_positions(docs, id_col, text_col, min_len, parallelism).persist()
+    pos = _seed_positions(docs, id_col, text_col, min_len).persist()
     grams = (
         pos.groupBy("_h")
         .agg(
@@ -172,7 +161,6 @@ def excise_repeated_spans(
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
-    parallelism: int | None = None,
     rescan: int = 0,
 ) -> DataFrame:
     """Self-deduplicate the corpus: cut every repeated span except its
@@ -211,9 +199,7 @@ def excise_repeated_spans(
     """
     if rescan < 0:
         raise ValueError(f"rescan must be >= 0, got {rescan}")
-    out = _excise_once(
-        docs, min_len, id_col=id_col, text_col=text_col, parallelism=parallelism
-    )
+    out = _excise_once(docs, min_len, id_col=id_col, text_col=text_col)
     for _ in range(rescan):
         out = out.persist()
         # bounded action: one aggregated row — did the last pass cut?
@@ -224,7 +210,6 @@ def excise_repeated_spans(
             min_len,
             id_col=id_col,
             text_col=text_col,
-            parallelism=parallelism,
         )
         prev = out.select(
             id_col,
@@ -246,7 +231,6 @@ def _excise_once(
     *,
     id_col: str,
     text_col: str,
-    parallelism: int | None,
 ) -> DataFrame:
     spans = repeated_spans(
         docs,
@@ -254,7 +238,6 @@ def _excise_once(
         id_col=id_col,
         text_col=text_col,
         keep_first=True,
-        parallelism=parallelism,
     )
     per_doc = spans.groupBy(id_col).agg(
         F.array_sort(

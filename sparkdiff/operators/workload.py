@@ -77,12 +77,6 @@ def case_ordering_key(branches: Sequence[tuple[Column, int]], default: int = 1) 
     return (expr.otherwise(F.lit(default)) if expr is not None else F.lit(default))
 
 
-def normalized_not_like(col: str, pattern: str) -> Column:
-    """P5: ``lower(COALESCE(col,'')) NOT LIKE pattern``
-    (``nw_customer_PRE_300.hql:10,28``)."""
-    return ~F.lower(F.coalesce(F.col(col), F.lit(""))).like(pattern)
-
-
 def detect_hot_keys(
     df: DataFrame,
     key: str,

@@ -16,15 +16,13 @@ Determinism rules (so the driver's order-insensitive value-hash matches):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparkdiff import testkit
 from sparkdiff.functions.canonical import content_checksum
 from sparkdiff.operators.diff import cell_diff, presence_diff, table_metrics
-from sparkdiff.session import load_table
+from sparkdiff.session import load_table, widen
 
 
 def _cents(col: str | F.Column) -> F.Column:
@@ -329,10 +327,11 @@ def q16_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the post-join projection — which the raw-text repartition widens
     # to full parallelism on a single-split scan (same jaccard∘tokens
     # expressions over the same pairs, so values are identical).
-    par = _corpus_parallelism(d)
-    a = d.select(F.col("doc_id").alias("doc_a"), F.col("text").alias("text_a"))
-    if par:
-        a = a.repartition(par)
+    a = widen(
+        d.select(F.col("doc_id").alias("doc_a"), F.col("text").alias("text_a")),
+        sf_dir,
+        "documents",
+    )
     b = d.select(
         (F.col("doc_id") - 250).alias("doc_a"),
         F.col("doc_id").alias("doc_b"),
@@ -437,12 +436,9 @@ def q21_relevance_blend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = load_table(spark, sf_dir, "documents")
-    # tokenize + Jaccard + substring term-hits per row: heavy enough for
-    # the single-split repartition opt-in (round-9 batch-10 A/B).
-    d = d.select("doc_id", "source", "text")
-    par = _corpus_parallelism(d)
-    if par:
-        d = d.repartition(par)
+    # tokenize + Jaccard + substring term-hits per row: heavy enough to
+    # widen a single-split scan (round-9 batch-10 A/B).
+    d = widen(d.select("doc_id", "source", "text"), sf_dir, "documents")
     query_toks = F.array(*[F.lit(t) for t in SEARCH_TERMS])
     semantic = jaccard(tokens("text"), query_toks)
     keyword = term_hits("text", SEARCH_TERMS).cast("double") / F.lit(
@@ -521,16 +517,15 @@ def q25_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("doc_id", F.col("doc_id") + 20_000)
         .withColumn("text", F.concat(F.col("text"), F.lit(" extra suffix words")))
     )
-    corpus = d.unionByName(dups)
+    # widened: a single-file corpus scan otherwise runs the whole
+    # tokenize+shingle+signature fan-out in one task (round 9)
+    corpus = widen(d.unionByName(dups), sf_dir, "documents")
     return near_dup_pairs(
         corpus,
         "doc_id",
         "text",
         threshold=0.6,
         hash_method="md5",
-        # single-file corpus scan -> one task for the whole
-        # tokenize+shingle+signature fan-out without this (round 9)
-        parallelism=spark.sparkContext.defaultParallelism,
     )
 
 
@@ -547,17 +542,10 @@ def q26_ngram_jaccard_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # differing downstream projections (the b side explodes two block
     # keys) defeat exchange reuse — one tokenize+shingle pass instead
     # of two, 1.62s -> 1.12s at sf0.1; MEMORY_AND_DISK spills.
-    # repartition BEFORE the char-shingle fan-out (q162's convention):
+    # widened BEFORE the char-shingle fan-out (q162's convention):
     # one shingle per corpus CHARACTER otherwise built in one task.
-    # Width routes through _corpus_parallelism so the
-    # SPARKDIFF_CORPUS_PARALLELISM=0 production off-switch disables
-    # this shuffle like every other opt-in (round-9 advisor finding).
-    pre = d.select("doc_id", "text")
-    par = _corpus_parallelism(d)
-    if par:
-        pre = pre.repartition(par)
     sh = with_char_shingles(
-        pre,
+        widen(d.select("doc_id", "text"), sf_dir, "documents"),
         "text",
         3,
         out="shg",
@@ -614,11 +602,10 @@ def q27_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sparkdiff.operators.dedup import simhash64
 
     d = load_table(spark, sf_dir, "documents")
-    # NOTE: simhash64's `parallelism` repartition was A/B'd here and
-    # REJECTED (round-9 batch-10: interleaved 1.25/1.47/1.28 vs
-    # 1.22/1.16/1.06 — the exchange + wider 64-agg partial state cost
-    # more than the wide md5 bought on this input; the hook stays for
-    # genuinely large single-file corpora).
+    # NOTE: widening the scan was A/B'd here and REJECTED (round-9
+    # batch-10: interleaved 1.25/1.47/1.28 vs 1.22/1.16/1.06 — the
+    # exchange + wider 64-agg partial state cost more than the wide md5
+    # bought on this input).
     return simhash64(d, "doc_id", tokens("text"), hash_method="md5")
 
 
@@ -1203,11 +1190,11 @@ def q55_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sparkdiff.functions.textstats import dup_fraction, word_ngrams
 
     d = load_table(spark, sf_dir, "documents")
-    # parallel=True: two word_ngrams HOF fan-outs + two dup_fractions per
+    # widened: two word_ngrams HOF fan-outs + two dup_fractions per
     # row is the heavy per-row class — the raw-text repartition buys
     # full-width map parallelism on a single-split scan (round-9 batch-10
     # A/B; `_toks` here is exactly _tokenized_docs' definition).
-    toks = _tokenized_docs(d, parallel=True).select("doc_id", "_toks")
+    toks = _tokenized_docs(widen(d, sf_dir, "documents")).select("doc_id", "_toks")
     grams = toks.select(
         "doc_id",
         word_ngrams(F.col("_toks"), 2).alias("_g2"),
@@ -1414,38 +1401,7 @@ def q62_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _corpus_parallelism(d: DataFrame) -> int:
-    """Fan-out parallelism for the documents corpus (round 9).
-
-    The local testdata ships each table as ONE small parquet file (one
-    row group — `maxPartitionBytes` cannot split it), so every
-    tokenize/gram/shingle fan-out downstream of the scan serializes
-    into one task at any core count.  A tiny doc-projection shuffle
-    buys full-width map parallelism for every consumer.
-
-    Parameterised per the scale rules: `SPARKDIFF_CORPUS_PARALLELISM`
-    overrides (0 disables — the production setting, because a real
-    multi-file corpus already has scan parallelism and the extra
-    full-corpus text shuffle would be pure cost); the local default is
-    the session's defaultParallelism, which also keeps the driver's
-    lower-core-count bench runs honest (parallelism follows the core
-    budget, never a constant).
-
-    Opt-in PER CALL SITE (``_tokenized_docs(..., parallel=True)``):
-    the back-to-back A/B (round 9) showed the repartition pays only
-    for the heavy fan-out queries (q68 2.07→1.29 s, q83 1.31→0.64 s,
-    q79, q66) while the lighter consumers each lose ~0.1–0.25 s of
-    stage overhead — so the heavy sites opt in and the rest keep the
-    scan layout."""
-    v = os.environ.get("SPARKDIFF_CORPUS_PARALLELISM")
-    if v is not None:
-        return int(v)
-    return d.sparkSession.sparkContext.defaultParallelism
-
-
-def _tokenized_docs(
-    d: DataFrame, extra: tuple = (), parallel: bool = False
-) -> DataFrame:
+def _tokenized_docs(d: DataFrame, extra: tuple = ()) -> DataFrame:
     """THE shared corpus projection: doc_id/text/n_chars plus the
     materialized lowercase token array every corpus-level pass (corpus
     stats, funnel gates, decontamination grams, dedup shingles) derives
@@ -1453,15 +1409,13 @@ def _tokenized_docs(
     (and, in q68, one cached projection) stay bit-identical.  ``extra``
     carries additional source columns (e.g. ``source``) through.
 
-    ``parallel=True`` repartitions BEFORE tokenizing (shuffle carries
-    raw text, not token arrays) so the tokenizer and every downstream
-    explode run wide — see :func:`_corpus_parallelism` for the knob and
-    for which call sites opt in."""
-    base = d.select("doc_id", "text", "n_chars", *extra)
-    par = _corpus_parallelism(d) if parallel else 0
-    if par:
-        base = base.repartition(par)
-    return base.select(
+    The heavy fan-out consumers (q55, q66-q68, q79, q83) pass a
+    :func:`~sparkdiff.session.widen`-ed scan: the repartition lands
+    BEFORE tokenizing (the shuffle carries raw text, not token arrays),
+    so the tokenizer and every downstream explode run wide.  The
+    round-9 A/B showed the lighter consumers each lose ~0.1-0.25 s of
+    stage overhead to it, so they keep the scan layout."""
+    return d.select("doc_id", "text", "n_chars", *extra).select(
         "*",
         F.filter(
             F.split(F.lower("text"), "[^a-z0-9]+"), lambda t: F.length(t) > 0
@@ -1596,7 +1550,7 @@ def q66_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-hash certifies the agreement), not strings, so the
     aggregation shuffle carries one long per hit."""
     d = load_table(spark, sf_dir, "documents")
-    return _contamination_hits(_tokenized_docs(d, parallel=True))
+    return _contamination_hits(_tokenized_docs(widen(d, sf_dir, "documents")))
 
 
 def _contamination_hits(base: DataFrame, k: int = 8) -> DataFrame:
@@ -1695,11 +1649,11 @@ def q67_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     row out to one row per stage — aggregate state is a dozen longs, so
     the shape is identical at 100 TB."""
     d = load_table(spark, sf_dir, "documents")
-    # parallel=True: the funnel's per-row work (PII regexes, quality
+    # widened: the funnel's per-row work (PII regexes, quality
     # heuristics, trigram dup-fraction) is the q68 class — heavy enough
     # that the raw-text repartition pays for itself when the scan is a
-    # single split (measured round-9 batch-10; same opt-in as q68).
-    flags = _funnel_flags(_tokenized_docs(d, parallel=True)).drop("doc_id")
+    # single split (measured round-9 batch-10; as in q68).
+    flags = _funnel_flags(_tokenized_docs(widen(d, sf_dir, "documents"))).drop("doc_id")
     surv = flags.select(
         "n_tok",
         F.col("f_lang").alias("s1"),
@@ -1764,7 +1718,7 @@ def q68_curated_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     key — AQE converts them to broadcast anti-joins whenever they fit,
     and they carry only doc_id either way."""
     d = load_table(spark, sf_dir, "documents")
-    base = _tokenized_docs(d, parallel=True).persist()
+    base = _tokenized_docs(widen(d, sf_dir, "documents")).persist()
     flags = _funnel_flags(base)
     keep = flags.filter(
         F.col("f_lang")
@@ -1934,11 +1888,11 @@ def q72_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         threshold=0.6,
         hash_method="md5",
         tokens_col="_toks",
-        # NOTE: the `parallelism` repartition was A/B'd here and
-        # REJECTED (round-9 batch-10: interleaved 1.38/1.45/1.43 vs
+        # NOTE: widening the input was A/B'd here and REJECTED
+        # (round-9 batch-10: interleaved 1.38/1.45/1.43 vs
         # 1.07/0.96/1.01 — with tokens_col set the shuffle carries the
         # materialized token ARRAYS, which costs more than the wide
-        # signature fan-out buys; the hook stays for raw-text callers).
+        # signature fan-out buys).
     )
 
 
@@ -2208,7 +2162,7 @@ def q79_posting_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sparkdiff.operators.retrieval import posting_lists
 
     d = load_table(spark, sf_dir, "documents")
-    t = _tokenized_docs(d, parallel=True)
+    t = _tokenized_docs(widen(d, sf_dir, "documents"))
     n = F.size("_toks")
     toks = t.select(
         "doc_id",
@@ -2410,7 +2364,7 @@ def q83_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     K = 8
     d = load_table(spark, sf_dir, "documents")
-    t = _tokenized_docs(d, parallel=True)
+    t = _tokenized_docs(widen(d, sf_dir, "documents"))
     n = F.size("_toks")
     grams = t.select(
         "doc_id",
@@ -2553,7 +2507,7 @@ def q86_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             "l_returnflag",
             "l_shipdate",
         ],
-        # NO parallelism: the same-host A/B (round 9) showed the extra
+        # not widened: the same-host A/B (round 9) showed the extra
         # repartition costs ~0.3 s more than the wide aggregate saves
         # at this scan size
     )
@@ -4308,13 +4262,12 @@ def q127_knn_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     rn = F.row_number().over(
         Window.partitionBy("_qid").orderBy("dist", "vec_id")
     )
-    # repartition the corpus side before the ×256 broadcast fan-out
-    # (round 9; the substring.py `parallelism` convention): the
-    # embeddings scan is one tiny file → ONE task otherwise computes
-    # all n×256 distances (measured: the whole timed run was a single
-    # 2 s task).  One tiny n-row shuffle buys 32-way distance compute;
-    # a real multi-file corpus already has scan parallelism.
-    corpus = e.repartition(spark.sparkContext.defaultParallelism)
+    # widen the corpus side before the ×256 broadcast fan-out (round
+    # 9): the embeddings scan is one tiny file → ONE task otherwise
+    # computes all n×256 distances (measured: the whole timed run was
+    # a single 2 s task).  One tiny n-row shuffle buys 32-way distance
+    # compute; a real multi-file corpus already has scan parallelism.
+    corpus = widen(e, sf_dir, "embeddings")
     nn = (
         corpus.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("_qid"))
@@ -4815,11 +4768,7 @@ def q141_repeated_substrings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sparkdiff.operators.substring import repeated_spans
 
     d = load_table(spark, sf_dir, "documents")
-    spans = repeated_spans(
-        d.select("doc_id", "text"),
-        30,
-        parallelism=spark.sparkContext.defaultParallelism,
-    )
+    spans = repeated_spans(widen(d.select("doc_id", "text"), sf_dir, "documents"), 30)
     return (
         spans.join(d.select("doc_id", "source"), "doc_id")
         .groupBy("source")
@@ -4855,10 +4804,10 @@ def q142_substring_selfdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sparkdiff.operators.substring import excise_repeated_spans
 
     d = load_table(spark, sf_dir, "documents")
+    # widened: the seed-position explode AND the per-doc excision
+    # rebuild both read this frame, so both run wide on a single split
     ex = excise_repeated_spans(
-        d.select("doc_id", "text"),
-        30,
-        parallelism=spark.sparkContext.defaultParallelism,
+        widen(d.select("doc_id", "text"), sf_dir, "documents"), 30
     )
     return (
         ex.join(d.select("doc_id", "source"), "doc_id")
@@ -5027,12 +4976,9 @@ def q145_selfdedup_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     sub = d.filter(F.col("doc_id") % 3 == 0).select("doc_id", "text")
-    ex = excise_repeated_spans(
-        sub,
-        30,
-        parallelism=spark.sparkContext.defaultParallelism,
-        rescan=1,
-    )
+    # widened as in q142; the rescan pass reads pass 1's output, which
+    # keeps this width, so it needs no repartition of its own
+    ex = excise_repeated_spans(widen(sub, sf_dir, "documents"), 30, rescan=1)
     return (
         ex.join(d.select("doc_id", "source"), "doc_id")
         .groupBy("source")
@@ -5646,13 +5592,7 @@ def q158_edit_distance_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").cast("long").alias("c_custkey"), "c_name"
     )
-    return edit_distance_join(
-        c,
-        "c_custkey",
-        "c_name",
-        d=1,
-        parallelism=spark.sparkContext.defaultParallelism,
-    )
+    return edit_distance_join(widen(c, sf_dir, "customer"), "c_custkey", "c_name", d=1)
 
 
 def q159_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5744,11 +5684,14 @@ def q160_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("balband"),
     )
     cand = edit_distance_join(
-        attrs.select(F.col("id").alias("c_custkey"), "c_name"),
+        widen(
+            attrs.select(F.col("id").alias("c_custkey"), "c_name"),
+            sf_dir,
+            "customer",
+        ),
         "c_custkey",
         "c_name",
         d=1,
-        parallelism=spark.sparkContext.defaultParallelism,
     )
     a = attrs.select(
         F.col("id").alias("_aid"),
@@ -5829,12 +5772,11 @@ def q161_blocking_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = d.unionByName(dups)
 
     lsh = near_dup_pairs(
-        corpus,
+        widen(corpus, sf_dir, "documents"),
         "doc_id",
         "text",
         threshold=0.6,
         hash_method="md5",
-        parallelism=spark.sparkContext.defaultParallelism,
     ).select(
         F.least("id_a", "id_b").alias("lo"), F.greatest("id_a", "id_b").alias("hi")
     )
@@ -5932,7 +5874,7 @@ def q162_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # Two measured shape decisions (10.4 s -> 2.4 s at sf0.1):
-    # repartition BEFORE the shingle projection (the corpus arrives as
+    # widen BEFORE the shingle projection (the corpus arrives as
     # 2 file splits and the interpreted shingle lambdas would
     # serialize into 2 tasks — everything between two exchanges runs
     # at the UPSTREAM exchange's width), and hash shingles to a 64-bit
@@ -5947,9 +5889,7 @@ def q162_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ~7x cheaper per row than md5+hex+conv) while the oracle replays
     # set containment on its own md5 domain — the value-hash certifies
     # the agreement.
-    corpus = d.unionByName(quotes).repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    corpus = widen(d.unionByName(quotes), sf_dir, "documents")
     elems = with_word_shingles(corpus, "text", 3, out="sh").select(
         "doc_id", F.explode(F.array_distinct("sh")).alias("_e")
     ).select("doc_id", token_hash(F.col("_e"), "xxhash64").alias("h"))
@@ -6256,7 +6196,7 @@ def q168_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
         unique(["l_orderkey", "l_linenumber"]),
         unique(["l_orderkey"]),
     ]
-    # NO parallelism: the same-host A/B (round 9) measured the
+    # not widened: the same-host A/B (round 9) measured the
     # repartitioned form neutral-to-worse — the distinct-count shuffle
     # already parallelizes the heavy half
     return expectation_report(li, checks)

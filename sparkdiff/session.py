@@ -188,3 +188,18 @@ def is_single_split(
         ]
         return len(parts) == 1 and os.path.getsize(parts[0]) <= max_bytes
     return False
+
+
+def widen(df: DataFrame, sf_dir: str, name: str) -> DataFrame:
+    """The one parallelism rule for heavy per-row work (tokenize, shingle,
+    explode, per-pair distance) over table ``name``: a single-split scan
+    (:func:`is_single_split`) runs as ONE task at any core count, so it
+    is repartitioned round-robin to the session's defaultParallelism; a
+    multi-split table already has scan parallelism and ``df`` comes back
+    unchanged — the extra full-input shuffle would be pure cost there.
+    Call it on the frame handed to the heavy stage.  A caller that wants
+    another width (SCALE.md's position-table sizing rule) repartitions
+    the frame itself.  File metadata only; no job is launched."""
+    if is_single_split(sf_dir, name):
+        return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    return df

@@ -17,7 +17,13 @@ from sparkdiff.multimodal.binaryops import (
     synthesize_assets,
 )
 from sparkdiff.session import load_table
-from sparkdiff.sources.io import read_csv, to_json_records, write_csv
+from sparkdiff.sources.io import (
+    clone_table,
+    insert_overwrite,
+    read_csv,
+    to_json_records,
+    write_csv,
+)
 from sparkdiff.streaming.validate import (
     incremental_validation,
     read_events_stream,
@@ -293,6 +299,47 @@ def test_csv_roundtrip_and_json_records(spark, tmp_path):
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
     js = to_json_records(df.limit(1)).collect()[0].json
     assert js.startswith('{"r_regionkey":')
+
+
+def test_clone_table_then_perturb_and_detect(spark):
+    """S12: the clone is an independent copy — a row planted in it shows
+    up in a presence diff against the untouched source."""
+    from sparkdiff.operators.diff import presence_diff
+
+    spark.sql("DROP TABLE IF EXISTS io_clone_src")
+    spark.sql("DROP TABLE IF EXISTS io_clone_dst")
+    try:
+        spark.sql(
+            "CREATE TABLE io_clone_src AS "
+            "SELECT * FROM VALUES (1, 'a'), (2, 'b') AS t(id, name)"
+        )
+        clone_table(spark, "io_clone_src", "io_clone_dst")
+        clone_table(spark, "io_clone_src", "io_clone_dst")  # replaces
+        src, dst = spark.table("io_clone_src"), spark.table("io_clone_dst")
+        assert sorted(map(tuple, dst.collect())) == [(1, "a"), (2, "b")]
+        spark.sql("INSERT INTO io_clone_dst VALUES (3, 'c')")
+        diff = presence_diff(src, spark.table("io_clone_dst"), "id").collect()
+        assert [(r.pk_value, r.side) for r in diff] == [("3", "sf_only")]
+        assert src.count() == 2
+    finally:
+        spark.sql("DROP TABLE IF EXISTS io_clone_src")
+        spark.sql("DROP TABLE IF EXISTS io_clone_dst")
+
+
+def test_insert_overwrite_replaces_rows(spark):
+    """S13: ``INSERT OVERWRITE`` replaces the table's rows, never appends."""
+    spark.sql("DROP TABLE IF EXISTS io_overwrite_t")
+    try:
+        spark.sql(
+            "CREATE TABLE io_overwrite_t AS "
+            "SELECT * FROM VALUES (1, 'a'), (2, 'b') AS t(id, name)"
+        )
+        fresh = spark.createDataFrame([(7, "z")], "id int, name string")
+        insert_overwrite(fresh, "io_overwrite_t")
+        got = spark.table("io_overwrite_t").collect()
+        assert sorted(map(tuple, got)) == [(7, "z")]
+    finally:
+        spark.sql("DROP TABLE IF EXISTS io_overwrite_t")
 
 
 def test_html_table_sink(spark):

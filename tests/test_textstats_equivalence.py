@@ -1,6 +1,6 @@
 """Round-9 batch-10 equivalence pins: the optimization round rewired
 several per-row text expressions onto the shared materialized token
-array (`_tokenized_docs`' `_toks`) and added repartition hooks.  Each
+array (`_tokenized_docs`' `_toks`) and widened single-split inputs.  Each
 change claims VALUE IDENTITY with the original expression — these tests
 pin that claim on corpora the fixed testdata never exercises (empty
 text, punctuation-only, stopword-only, marker-word ties, short tokens,
@@ -100,10 +100,11 @@ def test_pii_alternation_equals_per_pattern_count_sum(tricky):
 
 
 def test_simhash64_parallelism_hook_is_value_identical(tricky):
+    # a widened (repartitioned) input gives the same fingerprints
     from sparkdiff.operators.dedup import simhash64
 
     base = simhash64(tricky, "doc_id", F.col("_toks")).collect()
-    wide = simhash64(tricky, "doc_id", F.col("_toks"), parallelism=4).collect()
+    wide = simhash64(tricky.repartition(4), "doc_id", F.col("_toks")).collect()
     assert sorted((r.doc_id, r.simhash) for r in base) == sorted(
         (r.doc_id, r.simhash) for r in wide
     )
@@ -124,10 +125,11 @@ def test_incremental_near_dup_parallelism_hook_is_value_identical(spark):
         F.concat("text", F.lit(" revised")).alias("text"),
     )
 
-    def pairs(**kw):
+    def pairs(corpus, batch):
         rows = incremental_near_dup_pairs(
-            corpus, batch, "doc_id", "text", threshold=0.5, **kw
+            corpus, batch, "doc_id", "text", threshold=0.5
         ).collect()
         return sorted((r.corpus_id, r.batch_id, round(r.jaccard, 9)) for r in rows)
 
-    assert pairs() == pairs(parallelism=4)
+    # widened (repartitioned) inputs find the same pairs
+    assert pairs(corpus, batch) == pairs(corpus.repartition(4), batch.repartition(4))
