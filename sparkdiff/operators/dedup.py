@@ -637,22 +637,24 @@ def simhash64(
     oracle-checkable fingerprint with marginally coarser locality.
     """
     toks = df.select(F.col(id_col).alias("_id"), F.explode(tokens_col).alias("_t"))
-    h = token_hash("_t", hash_method)
-    votes = toks.groupBy("_id").agg(
+    # Hash each token once into a projected column, then emit the 64
+    # vote sums and the sign-bit reassembly as SQL text: built Column by
+    # Column they cost ~2,300 Py4J round trips at plan construction
+    # (SCALE.md hazard #8).  The reassembly adds the 64 terms left to
+    # right, exactly as the Column-built sum did.
+    hashed = toks.select("_id", token_hash("_t", hash_method).alias("_h"))
+    votes = hashed.groupBy("_id").agg(
         *[
-            F.sum(
-                (F.shiftrightunsigned(h, i).bitwiseAND(F.lit(1)) * 2 - 1).cast("long")
-            ).alias(f"b{i}")
+            F.expr(f"sum((shiftrightunsigned(_h, {i}) & 1) * 2 - 1) AS b{i}")
             for i in range(64)
         ]
     )
-    sig = None
-    for i in range(64):
-        term = F.when(
-            F.col(f"b{i}") > 0, F.shiftleft(F.lit(1).cast("long"), i)
-        ).otherwise(F.lit(0).cast("long"))
-        sig = term if sig is None else sig + term
-    sig_df = votes.select("_id", sig.alias("simhash"))
+    sig = " + ".join(
+        f"CASE WHEN b{i} > 0 THEN shiftleft(CAST(1 AS BIGINT), {i}) "
+        "ELSE CAST(0 AS BIGINT) END"
+        for i in range(64)
+    )
+    sig_df = votes.selectExpr("_id", f"{sig} AS simhash")
     ids = df.select(F.col(id_col).alias("_id")).distinct()
     return (
         ids.join(sig_df, "_id", "left")

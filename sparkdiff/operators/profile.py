@@ -22,7 +22,7 @@ with no per-column parallelism (11-16 s); (b) one single-distinct job
 per column — narrow shuffles but N+1 full scan jobs whose
 scheduler+GC overhead made q107 the most volatile bench query
 (median 5.5 s, runs 2-10 s).  The melt is the same shape as
-``quantiles._dist_quantiles`` (quantiles.py:102-109) and inherits its
+``quantiles._dist_quantiles`` (its one-``posexplode`` melt) and inherits its
 property: parallelism is (columns × value-hash) wide at every stage.
 For wide exploratory profiling at 100 TB swap ``exact_ndv=False`` to
 use HyperLogLog (``approx_count_distinct``) — one pass, no melt; the

@@ -33,8 +33,10 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from sparkdiff.operators._util import reserve_columns
 
 #: (output column name, value column, percentile) specs.
 QuantileSpec = tuple[str, str, float]
@@ -96,13 +98,13 @@ def _dist_quantiles(
     All value columns are melted into (column-id, value) rows by ONE
     ``posexplode``, so the source is scanned once regardless of how many
     columns are quantiled.  With ``cum="ranged"`` (default) the
-    cumulative count uses range-partitioned prefix sums (local window
-    per range bucket + cross-bucket offsets), NOT a per-group window —
-    a continuous column has ~n distinct values in one (key, column)
-    group, and a group-partitioned window would push the whole
-    distribution through one task.  ``cum="window"`` keeps the
-    single-window shape (fewer stages — measured ~1 s cheaper per call
-    at sf0.1) for callers whose value domain is PROVABLY bounded
+    cumulative count and ``n`` come from the :func:`_range_prefix_sum`
+    rail, NOT a per-group window: a continuous column has ~n distinct
+    values in one (key, column) group (q109: 600k rows), and a
+    group-partitioned window would push the whole distribution through
+    one task.  ``cum="window"`` keeps the single-window shape (fewer
+    stages, cheaper per call) for callers whose value domain is
+    PROVABLY bounded
     (quantized/categorical), where a group's distinct values fit one
     task at any corpus size.  NULLs are excluded per column (matching
     ``F.percentile``); ``n`` is the non-null count of the first spec's
@@ -132,60 +134,10 @@ def _dist_quantiles(
             F.sum("_c").over(w_cum).alias("_cum"),
             F.sum("_c").over(w_all).alias("_n"),
         )
-        return _interpolate(dist, keys, specs, vcols)
-    # Cumulative counts WITHOUT a per-group window: a continuous column
-    # (near-distinct doubles) makes one (key, column) group hold every
-    # distinct value, so `Window.partitionBy(keys, _cid).orderBy(_v)`
-    # funnels the whole distribution through one task (q109: 600k rows,
-    # one reducer).  Instead: range-repartition on (keys, _cid, _v) —
-    # parallel external sort; local prefix sums per range bucket; the
-    # cross-bucket offset is a prefix over the (keys, _cid, #buckets)-row
-    # bucket-sum table (window parallelism = groups x columns, each
-    # partition ≤ #buckets rows), joined back by equi-key.  Same _cum/_n
-    # values bit-for-bit; all consumers of the range exchange reuse one
-    # materialized shuffle (see scalable_row_number).
-    #
-    # TWO persists (round 9; guide §5), each load-bearing:
-    # - `counts`: repartitionByRange's boundary SAMPLING job executes
-    #   the child once more than the shuffle itself, so unpersisted the
-    #   whole scan→melt→groupBy chain runs twice per call.
-    # - `part`: every consumer below reads `_pid = spark_partition_id()`
-    #   and correctness requires ONE bucket assignment.  Un-cached, that
-    #   consistency came from ReuseExchange deduping the identical range
-    #   exchanges; with `counts` cached, the exchanges stopped
-    #   canonical-matching and the sides sampled boundaries
-    #   INDEPENDENTLY — caught by the sf0.1 oracle (wrong deciles).
-    #   Caching `part` pins one materialized assignment for everyone.
-    # Both are the distinct-(key, column, value) table, MEMORY_AND_DISK,
-    # released by the session owner's clearCache (PERSISTS_BY_DESIGN).
-    part = counts.persist().repartitionByRange(
-        *[F.col(c) for c in gb], F.col("_v")
-    ).withColumn("_pid", F.spark_partition_id()).persist()
-    w_local = Window.partitionBy(*gb, "_pid").orderBy("_v")
-    local = part.withColumn("_lcum", F.sum("_c").over(w_local))
-    bsums = part.groupBy(*gb, "_pid").agg(F.sum("_c").alias("_bc"))
-    w_off = (
-        Window.partitionBy(*gb)
-        .orderBy("_pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offs = bsums.select(
-        *gb,
-        "_pid",
-        F.coalesce(F.sum("_bc").over(w_off), F.lit(0)).alias("_off"),
-    )
-    tots = bsums.groupBy(*gb).agg(F.sum("_bc").alias("_n"))
-    dist = (
-        local.join(offs, [*gb, "_pid"])
-        .join(tots, gb)
-        .select(
-            *keys,
-            "_cid",
-            "_v",
-            (F.col("_off") + F.col("_lcum")).alias("_cum"),
-            "_n",
-        )
-    )
+    else:
+        dist = _range_prefix_sum(
+            counts, ["_v"], F.col("_c"), gb, cum_col="_cum", total_col="_n"
+        ).select(*keys, "_cid", "_v", "_cum", "_n")
     return _interpolate(dist, keys, specs, vcols)
 
 
@@ -235,82 +187,125 @@ def _interpolate(
     return grouped.select(*keys, *outs, "n")
 
 
+def _range_prefix_sum(
+    df: DataFrame,
+    order_cols: Sequence,
+    weight: Column | None = None,
+    groups: Sequence[str] = (),
+    cum_col: str = "_cum",
+    total_col: str | None = None,
+) -> DataFrame:
+    """The range-partitioned prefix-sum rail: ``df`` plus ``cum_col``,
+    the inclusive running sum of ``weight`` (1 per row when ``None``)
+    in ``(groups, order_cols)`` order, restarted per group, plus
+    ``total_col``, the group's total weight, when asked.  Group keys
+    match null-safely, so a NULL key is a group like any other.
+    ``order_cols`` must make the order total within a group (include a
+    unique tiebreak): the result then does not depend on where the
+    range sampler puts bucket boundaries.
+
+    Every exact global rank, running total and quantile in the package
+    (``scalable_row_number``, ``_dist_quantiles``' ranged mode,
+    ``weighted_quantile_cuts``, ``sampling.systematic_weighted_sample``)
+    rides this one function, which never plans a window over all rows
+    (``Window.orderBy`` with no partition is an ``Exchange
+    SinglePartition``: every row through one reducer):
+
+    1. ``repartitionByRange`` on ``(groups, order_cols)``: a parallel
+       external sort whose buckets are contiguous, ordered ranges;
+    2. a LOCAL running sum per (group, bucket), tagged by
+       ``_pid = spark_partition_id()``;
+    3. per (group, bucket) the weight of the group's lower buckets (its
+       offset) and the group total: one window over the bucket-sum
+       table, which holds at most #groups x #buckets rows and is
+       partitioned by group; ungrouped it is #buckets rows, broadcast;
+    4. offsets and totals joined back on (group, ``_pid``).
+
+    Two persists, both load-bearing.  The input: the range boundary
+    sampler executes its child once more than the shuffle does.  The
+    ``_pid`` table: the local sums and the bucket sums must see ONE
+    bucket assignment, and two range exchanges over the same input
+    sample their boundaries independently unless the optimizer happens
+    to dedupe them.  It stops doing so once the input is cached: in
+    round 9 that gave wrong deciles at sf0.1 and q143 offsets keyed to
+    the wrong assignment.  Neither persist has an unpersist handle: the
+    session owner's ``spark.catalog.clearCache()`` releases them, so
+    callers show up in the persist-lifecycle audit
+    (``PERSISTS_BY_DESIGN``)."""
+    order_cols, groups = list(order_cols), list(groups)
+    if weight is None:
+        weight = F.lit(1)
+    reserve_columns(
+        df,
+        ("_pid", "_lcum", "_bs", "_gpid", "_off", "_tot",
+         *(f"_g{i}" for i in range(len(groups)))),
+        "_range_prefix_sum",
+    )
+    # a caller that passes one frame to several rails (q143's two
+    # layouts) persists it once
+    src = df if df.is_cached else df.persist()
+    part = (
+        src.repartitionByRange(*groups, *order_cols)
+        .withColumn("_pid", F.spark_partition_id())
+        .persist()
+    )
+    running = (
+        Window.partitionBy(*groups, "_pid")
+        .orderBy(*order_cols)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    local = part.withColumn("_lcum", F.sum(weight).over(running))
+    bsums = part.groupBy(*groups, "_pid").agg(F.sum(weight).alias("_bs"))
+    per_group = Window.partitionBy(*groups).orderBy("_pid")
+    offs = bsums.select(
+        *(F.col(g).alias(f"_g{i}") for i, g in enumerate(groups)),
+        F.col("_pid").alias("_gpid"),
+        F.coalesce(
+            F.sum("_bs").over(
+                per_group.rowsBetween(Window.unboundedPreceding, -1)
+            ),
+            F.lit(0),
+        ).alias("_off"),
+        F.sum("_bs")
+        .over(
+            per_group.rowsBetween(
+                Window.unboundedPreceding, Window.unboundedFollowing
+            )
+        )
+        .alias("_tot"),
+    )
+    on = [F.col("_pid") == F.col("_gpid")] + [
+        F.col(g).eqNullSafe(F.col(f"_g{i}")) for i, g in enumerate(groups)
+    ]
+    totals = (
+        [F.col("_tot").cast("long").alias(total_col)] if total_col else []
+    )
+    return local.join(offs if groups else F.broadcast(offs), on).select(
+        *df.columns,
+        (F.col("_off") + F.col("_lcum")).cast("long").alias(cum_col),
+        *totals,
+    )
+
+
 def scalable_row_number(
     df: DataFrame,
     order_cols: Sequence,
     out_col: str = "rn",
+    total_col: str | None = None,
 ) -> DataFrame:
-    """Exact global ``row_number`` over a TOTAL order without funneling
-    the table through one task.
+    """Exact global ``row_number`` over a TOTAL order (include a unique
+    tiebreak) without funneling the table through one task: the
+    running row count on the :func:`_range_prefix_sum` rail.
+    ``total_col`` adds the row count of the whole table to every row,
+    the denominator ntile-style bucketing needs.
 
-    ``Window.orderBy(...)`` with no ``partitionBy`` plans an
-    ``Exchange SinglePartition`` — every row through one reducer, the
-    classic warehouse-scale cliff.  This rail keeps the same exact
-    semantics with three bounded pieces:
-
-    1. ``repartitionByRange`` on the sort key — a parallel external
-       sort; range buckets are globally ordered by partition id and
-       equal keys land in one bucket,
-    2. a LOCAL ``row_number`` per range bucket (window partitioned by
-       ``spark_partition_id()`` — parallelism = #buckets),
-    3. the cumulative bucket-count offset joined back as a broadcast —
-       the only small-table state is the #partitions-row counts table
-       (offset = Σ counts of lower buckets via a bounded broadcast
-       non-equi join, no SinglePartition exchange anywhere).
-
-    ``order_cols`` must be a total order (include a unique tiebreak) so
-    the result is deterministic regardless of where the range sampler
-    places bucket boundaries.  NOTE a real dependency: ``local`` and
-    ``counts`` both derive from the same ``part`` reference, and
-    correctness REQUIRES both to see the same ``_pid`` assignment —
-    i.e. the range exchange must be materialized once, not recomputed
-    with freshly-sampled boundaries.  ``part`` is therefore PERSISTED
-    (round 9): the rail originally leaned on canonical-subtree exchange
-    reuse (``ReuseExchange`` matching the two identical exchange
-    subtrees), which holds for plain scans but BROKE the moment a
-    caller persisted the rail's input (q143: the two range exchanges
-    over the InMemoryRelation stopped canonical-matching, sampled
-    boundaries independently, and the offsets keyed to the wrong
-    assignment — caught by the sf0.1 value-hash).  One cached
-    ``(_pid, row)`` table pins the assignment for both consumers under
-    any input, exactly like ``_dist_quantiles``' ``part`` persist.
-    Callers therefore show up in the persist-lifecycle audit
-    (PERSISTS_BY_DESIGN).
-
-    CACHE LIFECYCLE (round-9 advisor finding): the persist has no
-    unpersist handle — under the bench/oracle convention the session
-    owner calls ``spark.catalog.clearCache()`` between queries, which
-    bounds it.  A long-lived driver invoking this rail (or
-    ``systematic_weighted_sample``) repeatedly in one session — e.g.
-    ``layout.skipping_report`` looping over layouts, or ``blocking``'s
-    two calls — accumulates one bounded cache entry per call until the
-    owner clears; callers that need scoped lifetimes should pass a
-    pre-persisted input and manage it themselves (the
-    ``batch_shingles`` pattern in ``dedup.incremental_near_dup_pairs``).
-    """
-    order_cols = list(order_cols)
-    part = df.repartitionByRange(*order_cols).withColumn(
-        "_pid", F.spark_partition_id()
-    ).persist()
-    w = Window.partitionBy("_pid").orderBy(*order_cols)
-    local = part.withColumn("_lrn", F.row_number().over(w))
-    counts = part.groupBy("_pid").agg(F.count(F.lit(1)).alias("_c"))
-    offsets = (
-        counts.alias("a")
-        .join(
-            F.broadcast(counts.select(
-                F.col("_pid").alias("_bpid"), F.col("_c").alias("_bc")
-            )),
-            F.col("_bpid") < F.col("_pid"),
-            "left",
-        )
-        .groupBy("_pid")
-        .agg(F.coalesce(F.sum("_bc"), F.lit(0)).cast("long").alias("_off"))
-    )
-    return (
-        local.join(F.broadcast(offsets), "_pid")
-        .withColumn(out_col, (F.col("_off") + F.col("_lrn")).cast("long"))
-        .drop("_pid", "_lrn", "_off")
+    The rail persists its input and its bucket assignment, which the
+    session owner's ``clearCache`` releases.  A long-lived driver that
+    calls this repeatedly in one session (``layout.skipping_report``
+    looping over layouts, ``blocking``'s two calls) accumulates one
+    bounded cache entry per call until the owner clears."""
+    return _range_prefix_sum(
+        df, order_cols, cum_col=out_col, total_col=total_col
     )
 
 
@@ -327,52 +322,27 @@ def weighted_quantile_cuts(
     weighted corpus statistics, quantity-weighted price deciles).
 
     Scale shape: weights collapse to one row per DISTINCT value first
-    (map-side combine); the cumulative weight rides the same
-    range-partitioned prefix-sum rail as ``_dist_quantiles``'s ranged
-    mode — no per-group window over a continuous domain.  Cut
-    selection joins the (9-row, broadcast) target table with a >=
-    predicate and takes MIN(value) per bin; integer weights keep every
-    comparison exact."""
+    (map-side combine); the cumulative weight and the total ``W`` come
+    from the :func:`_range_prefix_sum` rail — no window over a
+    continuous domain.  Cut selection joins the (n_bins-1)-row bin
+    table, broadcast, with a >= predicate and takes MIN(value) per bin;
+    integer weights keep every comparison exact."""
     vw = df.groupBy(F.col(value_col).alias("_v")).agg(
         F.sum(weight_col).cast("long").alias("_w")
-    # persisted for the same reasons as _dist_quantiles' ranged path
-    # (round 9): `vw` so the boundary sampler does not re-run the
-    # scan→groupBy chain, `part` so every `_pid` consumer reads ONE
-    # materialized bucket assignment (see the comment there)
-    ).persist()
-    part = vw.repartitionByRange(F.col("_v")).withColumn(
-        "_pid", F.spark_partition_id()
-    ).persist()
-    w_local = Window.partitionBy("_pid").orderBy("_v")
-    local = part.withColumn("_lcum", F.sum("_w").over(w_local))
-    bsums = part.groupBy("_pid").agg(F.sum("_w").alias("_bc"))
-    # bounded: one row per range bucket (= shuffle partitions)
-    w_off = (
-        Window.partitionBy()
-        .orderBy("_pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
     )
-    offs = bsums.select(
-        "_pid", F.coalesce(F.sum("_bc").over(w_off), F.lit(0)).alias("_off")
+    pre = _range_prefix_sum(
+        vw, ["_v"], F.col("_w"), cum_col="_cum", total_col="_wsum"
     )
-    tot = bsums.agg(F.sum("_bc").cast("long").alias("_W"))
-    pre = local.join(offs, "_pid").select(
-        "_v", (F.col("_off") + F.col("_lcum")).cast("long").alias("_cum")
-    )
-    spark = df.sparkSession
-    targets = (
-        spark.range(1, n_bins)
-        .select(F.col("id").cast("long").alias("bin"))
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "bin",
-            F.expr(f"(bin * _W + {n_bins - 1}) DIV {n_bins}")
-            .cast("long")
-            .alias("target_weight"),
-        )
+    bins = df.sparkSession.range(1, n_bins).select(
+        F.col("id").cast("long").alias("bin")
     )
     return (
-        pre.join(F.broadcast(targets), F.col("_cum") >= F.col("target_weight"))
+        pre.crossJoin(F.broadcast(bins))
+        .withColumn(
+            "target_weight",
+            F.expr(f"(bin * _wsum + {n_bins - 1}) DIV {n_bins}").cast("long"),
+        )
+        .filter(F.col("_cum") >= F.col("target_weight"))
         .groupBy("bin", "target_weight")
         .agg(F.min("_v").alias("cut"))
     )

@@ -299,72 +299,44 @@ def systematic_weighted_sample(
         cnt(X) = clamp((2*k*X + W - 1) div (2*W), 0, k)
 
     counts the positions below X — so any engine reproduces the sample
-    bit-for-bit (requires ``W*(2k+1) <= 2^63-1``, asserted at runtime on
-    the one-row total so the builder stays lazy; negative weights and a
-    non-positive total ``W`` — which would make the draw positions
-    undefined — raise the same way).
+    bit-for-bit (requires ``W*(2k+1) <= 2^63-1``, asserted at runtime per
+    row against the rail's total so the builder stays lazy; negative
+    weights and a non-positive total ``W`` — which would make the draw
+    positions undefined — raise the same way).
 
-    Scale shape: cumulative weights ride the same range-partition
-    prefix-sum rail as ``quantiles.scalable_row_number`` — a parallel
-    external sort on the variate, a LOCAL running sum per range bucket,
-    and a broadcast #partitions-row offset join.  No single-partition
-    window, no collect, no corpus-sized driver state.
+    Scale shape: the cumulative weights and ``W`` come from the
+    ``quantiles._range_prefix_sum`` rail, ordered by the variate.  No
+    single-partition window, no collect, no corpus-sized driver state.
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    from pyspark.sql import Window
-
     from sparkdiff.operators._util import reserve_columns
+    from sparkdiff.operators.quantiles import _range_prefix_sum
 
     reserve_columns(
-        df,
-        ("_u", "_pid", "_lc", "_s", "_minw", "_off", "_cum", "_c0"),
-        "systematic_weighted_sample",
+        df, ("_u", "_cum", "_W", "_c0"), "systematic_weighted_sample"
     )
     wv = F.col(weight_col).cast("long")
-    base = df.withColumn("_u", unit_hash(key, seed))
-    # persisted: `local` and `sums` both read `part` and correctness
-    # REQUIRES one materialized `_pid` assignment.  ReuseExchange
-    # canonical-matching provided that for plain scans, but breaks when
-    # a caller persists the input (the q143 scalable_row_number lesson,
-    # round 9) — one cached table pins the assignment under any input.
-    part = base.repartitionByRange(F.col("_u"), F.col(key)).withColumn(
-        "_pid", F.spark_partition_id()
-    ).persist()
-    lw = (
-        Window.partitionBy("_pid")
-        .orderBy("_u", key)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = part.withColumn("_lc", F.sum(wv).over(lw).cast("long"))
-    sums = part.groupBy("_pid").agg(
-        F.sum(wv).cast("long").alias("_s"), F.min(wv).cast("long").alias("_minw")
-    )
-    offsets = (
-        sums.join(
-            F.broadcast(
-                sums.select(
-                    F.col("_pid").alias("_bpid"), F.col("_s").alias("_bs")
-                )
-            ),
-            F.col("_bpid") < F.col("_pid"),
-            "left",
-        )
-        .groupBy("_pid")
-        .agg(F.coalesce(F.sum("_bs"), F.lit(0)).cast("long").alias("_off"))
+    laid = _range_prefix_sum(
+        df.withColumn("_u", unit_hash(key, seed)),
+        [F.col("_u"), F.col(key)],
+        wv,
+        cum_col="_cum",
+        total_col="_W",
     )
     # W <= 0 (all-zero weights) would hit `div (2*_W)` = div-by-zero ->
     # NULL -> a silently EMPTY sample violating sum(out_col) == k; raise
     # like negative weights do.  Headroom: the count expression's max
     # intermediate is 2*k*W + W - 1 (X <= W), so require
-    # W*(2k+1) <= 2^63-1 — this also rejects the exact 2*k*W == 2^63
-    # boundary the old `>` floor-form admitted.
+    # W*(2k+1) <= 2^63-1.  Checked per row: the filter below evaluates
+    # every row, so any negative weight raises.
     guard_bad = (
-        (F.min("_minw") < 0)
-        | (F.sum("_s") <= 0)
-        | (F.sum("_s") > F.lit(((1 << 63) - 1) // (2 * k + 1)))
+        (wv < 0)
+        | (F.col("_W") <= 0)
+        | (F.col("_W") > F.lit(((1 << 63) - 1) // (2 * k + 1)))
     )
-    total = sums.groupBy().agg(
+    joined = laid.withColumn(
+        "_W",
         F.when(
             guard_bad,
             F.raise_error(
@@ -374,16 +346,8 @@ def systematic_weighted_sample(
                     "in a signed long"
                 )
             ).cast("long"),
-        )
-        .otherwise(F.sum("_s").cast("long"))
-        .alias("_W")
-    )
-    joined = (
-        local.join(F.broadcast(offsets), "_pid")
-        .crossJoin(F.broadcast(total))
-        .withColumn("_cum", (F.col("_off") + F.col("_lc")).cast("long"))
-        .withColumn("_c0", (F.col("_cum") - wv).cast("long"))
-    )
+        ).otherwise(F.col("_W")),
+    ).withColumn("_c0", (F.col("_cum") - wv).cast("long"))
     # integer `div` keeps the count exact where a double division would
     # lose ulps past 2^53; operands are non-negative so div == floor
     cnt = (
@@ -399,7 +363,7 @@ def systematic_weighted_sample(
             ).cast("long"),
         )
         .filter(F.col(out_col) >= 1)
-        .drop("_u", "_pid", "_lc", "_off", "_W", "_cum", "_c0")
+        .drop("_u", "_W", "_cum", "_c0")
     )
 
 

@@ -29,11 +29,13 @@ _JOIN_RE = re.compile(
     r"BroadcastNestedLoopJoin|CartesianProduct)\b"
 )
 _SHUFFLE_RE = re.compile(
-    # roundrobin covers keyless repartition(n) — the round-9 parallelism
-    # opt-ins (q16/q21/q26/q55/q67) add these, and an accidental
-    # full-corpus repartition must be pinned like any other exchange
-    # (round-9 advisor finding: they were invisible to the snapshots)
-    r"\bExchange (?:hash|range|single|roundrobin)partitioning\b"
+    # Spark prints the four partitionings as `hashpartitioning(...)`,
+    # `rangepartitioning(...)`, `SinglePartition` and
+    # `RoundRobinPartitioning(n)`.  The last two are what a keyless
+    # repartition (session.widen) and a global aggregate or window add,
+    # so they must be pinned like any other exchange.
+    r"\bExchange (?:hashpartitioning|rangepartitioning|SinglePartition|"
+    r"RoundRobinPartitioning)\b"
 )
 _BROADCAST_X_RE = re.compile(r"\bBroadcastExchange\b")
 _PYTHON_RE = re.compile(

@@ -3796,29 +3796,24 @@ def q117_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     spend, bucketed into deciles by RANK (top-10% of customers first),
     each decile reporting its share of total revenue — the "does 20%
     of the base drive 80% of revenue" report.  The exact global rank
-    comes from the :func:`scalable_row_number` rail (range-partitioned
-    local windows + broadcast bucket offsets — NO single-partition
-    Exchange; at warehouse scale 10^8 customers would otherwise funnel
-    through one reducer), and ntile's bucket arithmetic is reproduced
-    from (rn, n) in exact integer DIV; revenue shares divide exact
-    cent-longs by the one total at the end."""
+    and the customer count n come from the :func:`scalable_row_number`
+    rail (NO single-partition Exchange; at warehouse scale 10^8
+    customers would otherwise funnel through one reducer), and ntile's
+    bucket arithmetic is reproduced from (rn, n) in exact integer DIV;
+    revenue shares divide exact cent-longs by the one total at the
+    end."""
     from sparkdiff.operators.quantiles import scalable_row_number
 
     o = load_table(spark, sf_dir, "orders")
-    # persisted: per_cust feeds the rank rail (whose range exchange
-    # executes its child for boundary sampling AND the shuffle) plus
-    # the one-row denominator — 3 executions of the orders rollup
-    # otherwise (round-9; guide §5).  Customer-count rows.
     per_cust = o.groupBy("o_custkey").agg(
         F.sum(_cents("o_totalprice")).cast("long").alias("cents")
-    ).persist()
-    rn = scalable_row_number(
-        per_cust, [F.desc("cents"), F.asc("o_custkey")], "rn"
     )
-    n_row = per_cust.groupBy().agg(F.count(F.lit(1)).alias("_n"))
+    rn = scalable_row_number(
+        per_cust, [F.desc("cents"), F.asc("o_custkey")], "rn", "_n"
+    )
     # ntile(10) from (rn, n): the first n%10 buckets hold n DIV 10 + 1
     # rows, the rest n DIV 10 — identical to Spark/DuckDB NTILE.
-    ranked = rn.crossJoin(F.broadcast(n_row)).select(
+    ranked = rn.select(
         "cents",
         F.expr(
             "CAST(CASE WHEN rn <= (_n % 10) * (_n DIV 10 + 1) "
@@ -4316,18 +4311,14 @@ def q128_customer_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integers (rank-weighted cent sums in DECIMAL(38,0) — i·cᵢ
     overflows BIGINT at warehouse scale) with ONE double division at
     the end.  The exact rank i comes from the
-    :func:`scalable_row_number` rail (range-partitioned local windows
-    + broadcast bucket offsets) — no single-partition Exchange even at
-    10^8 customers."""
+    :func:`scalable_row_number` rail — no single-partition Exchange
+    even at 10^8 customers."""
     from sparkdiff.operators.quantiles import scalable_row_number
 
     o = load_table(spark, sf_dir, "orders")
-    # persisted: the rank rail's range exchange executes its child for
-    # boundary sampling AND the shuffle — 2 executions of the orders
-    # rollup otherwise (round-9; guide §5).
     per_cust = o.groupBy("o_custkey").agg(
         F.sum(_cents("o_totalprice")).cast("long").alias("cents")
-    ).persist()
+    )
     ranked = scalable_row_number(
         per_cust, [F.asc("cents"), F.asc("o_custkey")], "i"
     ).select("cents", "i")
@@ -4855,10 +4846,6 @@ def q143_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("o_day").alias("d_min"),
         F.max("o_day").alias("d_max"),
     )
-    # persisted: z feeds TWO independent sort rails (linear + zorder),
-    # and each rail's repartitionByRange executes its child once for
-    # boundary sampling and once for the shuffle — unpersisted, the
-    # scan + Morton-key chain ran ~4x (round-9; guide §5).  32 B/row.
     z = o.crossJoin(F.broadcast(rng)).select(
         "o_orderkey",
         "o_custkey",
@@ -4867,7 +4854,7 @@ def q143_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             scale16(F.col("o_custkey"), F.col("ck_min"), F.col("ck_max")),
             scale16(F.col("o_day"), F.col("d_min"), F.col("d_max")),
         ).alias("zkey"),
-    ).persist()
+    )
     lo_ck, hi_ck = 100, 400
     lo_d, hi_d = 10_408, 10_499  # 1998-07-01 .. 1998-09-30
     rep = skipping_report(
@@ -4915,12 +4902,10 @@ def q144_quantile_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(quality_score("text") * F.lit(1_000_000.0))
         .cast("long")
         .alias("q"),
-    # persisted: the scored projection feeds THREE consumers (global
-    # rank rail, corpus count, per-source rank window) — unpersisted,
-    # the quality_score text pass executes once per consumer for a
-    # ~24 B/row table (round-9 batch-7; the q104 defect class)
-    ).persist()
-    # global sorted table: g-th smallest score (g = 1..N)
+    )
+    # global sorted table: g-th smallest score (g = 1..N).  The rail
+    # persists `d`, so the corpus count and the per-source window below
+    # read that cache too: one quality_score pass over the text.
     glob = scalable_row_number(d, [F.col("q"), F.col("doc_id")], "g").select(
         F.col("g").alias("_g"), F.col("q").alias("q_cal")
     )
@@ -6617,7 +6602,7 @@ def q176_equifreq_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
     the feature-engineering pass behind WOE/IV scorecards and monotonic
     binning: customers ranked by account balance on the
     ``scalable_row_number`` rail (exact global order, NO
-    single-partition window — quantiles.py:210), split into 8
+    single-partition window), split into 8
     equal-frequency bins, each bin reporting its row count, positive /
     negative outcome counts (outcome = customer placed at least one
     1-URGENT order), and exact integer-cents balance bounds.  The WOE
@@ -6626,8 +6611,8 @@ def q176_equifreq_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: outcome flags come from a semi-join-shaped aggregate
     (distinct urgent custkeys, key-grouped — never a row explosion);
-    the global rank is the range-partitioned rail; the one-row corpus
-    count broadcasts (q102 shape); the report is 8 rows."""
+    the global rank and the corpus count both come from the range-
+    partitioned rail; the report is 8 rows."""
     from sparkdiff.operators.quantiles import scalable_row_number
 
     c = load_table(spark, sf_dir, "customer").select(
@@ -6640,19 +6625,15 @@ def q176_equifreq_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .withColumn("pos", F.lit(1).cast("long"))
     )
-    # persisted: labeled feeds the rank rail (boundary sampler + range
-    # shuffle each execute the child) AND the one-row denominator —
-    # 3 executions of the join otherwise (round-9; guide §5).
     labeled = c.join(urgent, "c_custkey", "left").select(
         "c_custkey",
         _cents("c_acctbal").alias("bal_cents"),
         F.coalesce("pos", F.lit(0)).alias("pos"),
-    ).persist()
-    ranked = scalable_row_number(
-        labeled, [F.col("bal_cents"), F.col("c_custkey")], out_col="rn"
     )
-    n_total = labeled.agg(F.count(F.lit(1)).alias("_n"))
-    binned = ranked.crossJoin(F.broadcast(n_total)).select(
+    ranked = scalable_row_number(
+        labeled, [F.col("bal_cents"), F.col("c_custkey")], "rn", "_n"
+    )
+    binned = ranked.select(
         F.expr("(rn - 1) * 8 DIV _n").cast("long").alias("bin"),
         "bal_cents",
         "pos",
@@ -7659,22 +7640,15 @@ def q197_decile_mobility(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def year_deciles(yr: int, out: str) -> DataFrame:
-        # persisted: the per-year spend table feeds the rank rail —
-        # whose range exchange executes its child once for boundary
-        # sampling and once for the shuffle — AND the decile
-        # denominator n (round-9; guide §5).  Customer-count rows.
         spend = (
             o.filter(F.col("yr") == yr)
             .groupBy("o_custkey")
             .agg(F.sum("cents").alias("spend"))
-            .persist()
         )
-        ranked = scalable_row_number(spend, ["spend", "o_custkey"], "rn")
-        # row_number never changes cardinality, so the denominator is
-        # spend's count — one cache-read aggregate instead of a second
-        # execution of the whole rank rail (value-identical).
-        n = spend.agg(F.count(F.lit(1)).alias("n"))
-        return ranked.crossJoin(F.broadcast(n)).select(
+        ranked = scalable_row_number(
+            spend, ["spend", "o_custkey"], "rn", "n"
+        )
+        return ranked.select(
             "o_custkey",
             F.expr("(rn - 1) * 10 DIV n").cast("long").alias(out),
         )

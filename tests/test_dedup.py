@@ -861,20 +861,11 @@ def test_minhash_and_band_keys_match_python_reference(spark, method):
     }
 
 
-def test_corpus_dedup_index_construction_py4j_calls(spark):
-    """Constructing the corpus index is a driver-side cost paid per
-    ingest gate: its 64 MinHash aggregates and 16 band keys are built as
-    SQL text, not Column by Column, and the session skips PySpark's
-    per-call call-site capture.  Built Column by Column with call-site
-    capture on, the same construction made ~5,900 Py4J calls; a count
-    does not flake the way a time would.  Object releases are left out:
-    a background thread sends them whenever earlier objects die."""
+def _py4j_calls(spark, build):
+    """Py4J calls ``build()`` makes.  Object releases are left out: a
+    background thread sends them whenever earlier objects die."""
     from py4j.protocol import MEMORY_COMMAND_NAME
 
-    from sparkdiff.operators.dedup import corpus_dedup_index
-
-    docs = load_table(spark, SF_DIR_SMALL, "documents").select("doc_id", "text")
-    corpus_dedup_index(docs, "doc_id", "text")  # first build may infer types
     client_cls = type(spark.sparkContext._gateway._gateway_client)
     orig = client_cls.send_command
     calls = 0
@@ -887,8 +878,38 @@ def test_corpus_dedup_index_construction_py4j_calls(spark):
 
     client_cls.send_command = counting
     try:
-        index = corpus_dedup_index(docs, "doc_id", "text")
+        out = build()
     finally:
         client_cls.send_command = orig
+    return calls, out
+
+
+def test_corpus_dedup_index_construction_py4j_calls(spark):
+    """Constructing the corpus index is a driver-side cost paid per
+    ingest gate: its 64 MinHash aggregates and 16 band keys are built as
+    SQL text, not Column by Column, and the session skips PySpark's
+    per-call call-site capture.  Built Column by Column with call-site
+    capture on, the same construction made ~5,900 Py4J calls; a count
+    does not flake the way a time would."""
+    from sparkdiff.operators.dedup import corpus_dedup_index
+
+    docs = load_table(spark, SF_DIR_SMALL, "documents").select("doc_id", "text")
+    corpus_dedup_index(docs, "doc_id", "text")  # first build may infer types
+    calls, index = _py4j_calls(
+        spark, lambda: corpus_dedup_index(docs, "doc_id", "text")
+    )
     assert len(index) == 2
     assert calls <= 1000, f"{calls} Py4J calls to construct corpus_dedup_index"
+
+
+def test_simhash64_construction_py4j_calls(spark):
+    """simhash64's 64 per-bit vote sums and its 64-term reassembly are
+    SQL text.  Built Column by Column, the q27 plan took ~2,300 Py4J
+    calls to construct; as text it takes about 500."""
+    docs = load_table(spark, SF_DIR_SMALL, "documents")
+    simhash64(docs, "doc_id", tokens("text"), hash_method="md5")
+    calls, _ = _py4j_calls(
+        spark,
+        lambda: simhash64(docs, "doc_id", tokens("text"), hash_method="md5"),
+    )
+    assert calls <= 1000, f"{calls} Py4J calls to construct simhash64"

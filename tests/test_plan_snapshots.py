@@ -140,32 +140,12 @@ _INTENTIONAL_NLJ = {
     # The orphan checks themselves are left_anti equi-joins.
     "q109_equidepth_histogram",
     "q110_fk_integrity",
-    # q117/q128 rank via the scalable_row_number rail: the cumulative
-    # bucket-offset table is built by a bounded non-equi join over the
-    # #partitions-row bucket-counts table (P x P rows, P = shuffle
-    # partitions — never data-sized), replacing the old
-    # single-partition global rank window; q117 also broadcasts the
-    # ONE-ROW revenue total / customer count (q76/q90 stats shape).
+    # q117 ranks on the scalable_row_number rail and broadcasts the
+    # ONE-ROW revenue total (q76/q90 stats shape).
     "q117_revenue_concentration",
-    "q128_customer_gini",
-    # q197 rides the scalable_row_number rail TWICE (one ranking per
-    # year: two bounded bucket-offset broadcasts) plus two ONE-ROW
-    # per-year count broadcasts for the decile cut — all bounded
-    # small sides; the corpus work is keyed sums + one equi-join.
-    "q197_decile_mobility",
-    # q176 rides the same rail (bounded #partitions-row bucket-offset
-    # non-equi broadcast) plus the ONE-ROW corpus-count broadcast that
-    # turns ranks into equal-frequency bins (q102/q76 stats shape).
-    "q176_equifreq_binning",
     # q186's cut selection is a 9-row broadcast >= join over the
-    # prefix-summed distinct-value table, plus the ONE-ROW total-weight
-    # broadcast that sizes the targets (q109's cut-table shape).
+    # prefix-summed distinct-value table (q109's cut-table shape).
     "q186_weighted_quantiles",
-    # q135 rides the same rail: the bucket-offset table is the bounded
-    # #partitions-row non-equi broadcast join, and the total weight is
-    # a ONE-ROW broadcast (q76/q90 stats shape) carrying the overflow
-    # guard; the corpus itself never joins anything.
-    "q135_pps_sample",
     # q121 broadcasts the k×d centroid table for Lloyd assignment and
     # query probing (the q75 shape); list membership and candidate
     # ranking are equi-joins/windows.
@@ -186,41 +166,26 @@ _INTENTIONAL_NLJ = {
     # q139 broadcasts the ONE-ROW (total tokens, Σ√n) aggregate over
     # the 20-row per-source table (q76/q90 stats shape).
     "q139_temperature_mix",
-    # q143 rides the scalable_row_number rail once per candidate layout
-    # (bounded bucket-offset non-equi joins, q117/q135 shape) and
-    # broadcasts the ONE-ROW min/max range aggregate for the integer
-    # scaling (q76/q90 stats shape).
+    # q143 broadcasts the ONE-ROW min/max range aggregate into the
+    # Morton-key table for the integer scaling (q76/q90 stats shape);
+    # the plan text repeats that join under each cached copy.
     "q143_zorder_skipping",
-    # q159 ranks on the scalable_row_number rail twice (probe and
-    # successor sides of the self-join): each instance carries the
-    # rail's bounded #partitions-row bucket-offset non-equi broadcast
-    # (q135/q144 shape).  The candidate pairing itself is the integer
-    # rank EQUI-join — the corpus never cross-joins anything.
-    "q159_sorted_neighborhood",
     # q160's u-probability table is ONE ROW (n + four exact freq^2
     # sums) crossJoin-broadcast over the candidate pairs — the q76/q90
     # stats shape; candidates come from q158's FastSS equi-join and the
     # attribute joins are equi-joins.
     "q160_record_linkage",
-    # q161 combines three allowlisted shapes: the q159 rail (bounded
-    # bucket-offset non-equi broadcasts) on the SNM side and the
-    # ONE-ROW truth-count crossJoin broadcast on the output; candidate
-    # generation itself is the q25 band equi-join and the rank
-    # equi-join.
+    # q161 broadcasts the ONE-ROW truth count over its output;
+    # candidate generation itself is the q25 band equi-join and the
+    # sorted-neighborhood rank equi-join.
     "q161_blocking_recall",
     # q163's per-column stats rows are ONE-ROW aggregates (totals,
     # p99) cross-joined back over each other — bounded 1x1 broadcasts
     # (q102/q110 shape); the only corpus-sized work is the per-column
     # map-side-combined groupBy.
     "q163_skew_report",
-    # q163's per-column stats rows are ONE-ROW aggregates (totals,
-    # p99) cross-joined back over each other — bounded 1x1 broadcasts
-    # (q102/q110 shape); the only corpus-sized work is the per-column
-    # map-side-combined groupBy.
-    "q163_skew_report",
-    # q144: the same rail for the global order statistics plus the
-    # ONE-ROW corpus-count broadcast (q76/q90 stats shape); the
-    # midpoint-index lookup itself is a data-sized equi-join.
+    # q144 broadcasts the ONE-ROW corpus count (q76/q90 stats shape);
+    # the midpoint-index lookup itself is a data-sized equi-join.
     "q144_quantile_calibration",
 }
 

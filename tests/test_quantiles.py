@@ -4,6 +4,7 @@ bound, and the registered q50 must not buffer whole groups."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from sparkdiff.operators.quantiles import grouped_quantiles
@@ -159,3 +160,124 @@ def test_scalable_row_number_empty_and_single(spark):
     assert scalable_row_number(df.filter("v < 0"), [F.asc("v")]).count() == 0
     one = scalable_row_number(df.filter("v = 3"), [F.asc("v")]).collect()
     assert [(r.v, r.rn) for r in one] == [(3, 1)]
+
+
+def test_dist_keeps_the_null_key_group(spark):
+    """A NULL grouping key is a group like any other: the ranged rail
+    joins its bucket offsets and totals back null-safely, so ``dist``
+    returns the same NULL-key row as ``exact`` under both ``cum``
+    strategies."""
+    df = spark.createDataFrame(
+        [("a", 1.0), ("a", 3.0), (None, 5.0), (None, 7.0), (None, 9.0)],
+        "g string, v double",
+    )
+    specs = [("p50", "v", 0.5)]
+
+    def by_key(out):
+        return {r["g"]: tuple(r) for r in out.collect()}
+
+    exact = by_key(grouped_quantiles(df, ["g"], specs, method="exact"))
+    assert exact == {None: (None, 7.0, 3), "a": ("a", 2.0, 2)}
+    for cum in ("ranged", "window"):
+        dist = grouped_quantiles(df, ["g"], specs, method="dist", cum=cum)
+        assert by_key(dist) == exact, cum
+    spark.catalog.clearCache()
+
+
+def _rail_input(spark):
+    # 3,001 rows over three keys and a NULL key, so groups span several
+    # of the 8 range buckets; (v, k) is a total order within a group
+    return spark.range(0, 3001).select(
+        F.when(F.col("id") % 4 == 0, F.lit(None))
+        .otherwise(F.concat(F.lit("g"), (F.col("id") % 3).cast("string")))
+        .alias("g"),
+        (F.col("id") * 2654435761 % 997).alias("v"),
+        F.col("id").alias("k"),
+        (F.col("id") % 13).alias("w"),
+    )
+
+
+@pytest.mark.parametrize("shape", ["plain", "repartition7", "persisted"])
+@pytest.mark.parametrize("weighted", [False, True])
+@pytest.mark.parametrize("groups", [[], ["g"]])
+def test_range_prefix_sum_matches_window(spark, groups, weighted, shape):
+    """The one prefix-sum rail behind every exact rank, running total
+    and quantile must equal a plain ``Window`` running sum and group
+    total, whatever the input's partitioning — including an input the
+    caller persisted, where two range exchanges would otherwise sample
+    their bucket boundaries independently (the round-9 q143 bug)."""
+    from pyspark.sql import Window
+
+    from sparkdiff.operators.quantiles import _range_prefix_sum
+
+    spark.catalog.clearCache()
+    df = _rail_input(spark)
+    weight = F.col("w") if weighted else None
+    order = [F.col("v"), F.col("k")]
+    ref_w = F.col("w") if weighted else F.lit(1)
+    spec = Window.partitionBy(*groups)
+    want = {
+        (r.k, r.cum, r.tot)
+        for r in df.select(
+            "k",
+            F.sum(ref_w)
+            .over(
+                spec.orderBy(*order).rowsBetween(
+                    Window.unboundedPreceding, Window.currentRow
+                )
+            )
+            .alias("cum"),
+            F.sum(ref_w).over(spec).alias("tot"),
+        ).collect()
+    }
+    src = {
+        "plain": df,
+        "repartition7": df.repartition(7),
+        "persisted": df.persist(),
+    }[shape]
+    got_df = _range_prefix_sum(src, order, weight, groups, "cum", "tot")
+    assert got_df.columns == df.columns + ["cum", "tot"]
+    got = {(r.k, r.cum, r.tot) for r in got_df.collect()}
+    spark.catalog.clearCache()
+    assert got == want
+
+
+def test_range_prefix_sum_empty_input(spark):
+    from sparkdiff.operators.quantiles import _range_prefix_sum
+
+    empty = _rail_input(spark).filter("k < 0")
+    for groups in ([], ["g"]):
+        out = _range_prefix_sum(
+            empty, ["v", "k"], F.col("w"), groups, "cum", "tot"
+        )
+        assert out.count() == 0
+    spark.catalog.clearCache()
+
+
+def test_range_partitioning_lives_in_one_helper():
+    """``repartitionByRange`` and ``spark_partition_id`` are called only
+    inside ``quantiles._range_prefix_sum``: a fifth hand-rolled copy of
+    the rail (and of its bucket-assignment hazard) fails here."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "sparkdiff"
+    sites = set()
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for node in ast.walk(fn):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr
+                    in ("repartitionByRange", "spark_partition_id")
+                ):
+                    rel = path.relative_to(pkg).as_posix()
+                    sites.add((rel, fn.name, node.func.attr))
+    assert sites == {
+        ("operators/quantiles.py", "_range_prefix_sum", "repartitionByRange"),
+        ("operators/quantiles.py", "_range_prefix_sum", "spark_partition_id"),
+    }

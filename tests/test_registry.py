@@ -146,8 +146,9 @@ PERSISTS_BY_DESIGN: dict[str, str] = {
     "q25_minhash_neardup": "signature table feeds band keys AND verify join",
     "q26_ngram_jaccard_dups": "shingle table feeds bucket join AND verify",
     "q46_lineitem_diff": "canonical pair base feeds presence AND cell diff",
-    "q50_quantiles": "quantile rail distinct-value table is executed by "
-    "the range-boundary sampler AND the range shuffle itself",
+    "q50_quantiles": "quantiles._range_prefix_sum persists the "
+    "distinct-value table (the range-boundary sampler AND the range "
+    "shuffle execute it) and its one _pid bucket assignment",
     "q51_embedding_neardup": "SRP band-key table feeds both self-join "
     "sides (one ArrowEvalPython pass instead of two)",
     "q63_rare_tokens": "exploded token table feeds the frequency "
@@ -177,21 +178,24 @@ PERSISTS_BY_DESIGN: dict[str, str] = {
     "q102_triangle_count": "degree-ordered edge list is joined to itself 3x",
     "q103_mad_outliers": "tiny per-type median/MAD tables persisted — "
     "`dev` embeds the median chain and feeds the MAD pass AND final join",
-    "q105_rfm_segments": "quantile rail distinct-value table feeds the "
-    "range sampler AND shuffle (q50 machinery)",
+    "q105_rfm_segments": "quantiles._range_prefix_sum persists the "
+    "distinct-value table and its _pid assignment (q50 machinery)",
     "q109_equidepth_histogram": "one distinct-(value, count) table feeds "
-    "the quantile rail (count_col) AND the binning pass; the rail's "
-    "internal persists ride along (q50 machinery)",
+    "the quantile rail (count_col) AND the binning pass; "
+    "quantiles._range_prefix_sum's persists ride along (q50 machinery)",
     "q104_skyline": "scored (id, x, y) projection feeds bucket maxima, "
     "candidate filter and both dominance sides (one quality_score pass)",
     "q107_profile_drift": "profile base feeds both drift sides",
     "q113_dup_families": "CC loop survivors (large-star/small-star rounds)",
-    "q117_revenue_concentration": "per-customer spend feeds the rank "
-    "rail (boundary sampler + range shuffle) AND the ntile denominator",
-    "q128_customer_gini": "per-customer spend feeds the rank rail "
-    "(boundary sampler + range shuffle execute the child twice)",
-    "q176_equifreq_binning": "labeled balance table feeds the rank rail "
-    "(boundary sampler + range shuffle) AND the bin denominator",
+    "q117_revenue_concentration": "quantiles._range_prefix_sum persists "
+    "the per-customer spend table (boundary sampler + range shuffle) and "
+    "its _pid assignment; the ntile denominator is the rail's total",
+    "q128_customer_gini": "quantiles._range_prefix_sum persists the "
+    "per-customer spend table (boundary sampler + range shuffle) and its "
+    "_pid assignment",
+    "q176_equifreq_binning": "quantiles._range_prefix_sum persists the "
+    "labeled balance table (boundary sampler + range shuffle) and its "
+    "_pid assignment; the bin denominator is the rail's total",
     "q121_ivf_ann": "final IVF centroid table feeds corpus assignment "
     "AND query probe (k×d rows, retrieval.ivf_topk_deterministic)",
     "q125_setsim_prefix_join": "dup-group membership table feeds core "
@@ -200,18 +204,19 @@ PERSISTS_BY_DESIGN: dict[str, str] = {
     "q126_ann_recall": "IVF centroid persist (q121 machinery) + the "
     "15-row exact top-3 feeds hit semi-join AND denominator",
     "q124_dist_drift": "histogram base feeds both snapshot sides",
-    "q135_pps_sample": "systematic-sample range rail persists its "
-    "(_pid, row) assignment — local prefix sums AND bucket totals must "
-    "read ONE materialization (the q143 rail lesson)",
+    "q135_pps_sample": "quantiles._range_prefix_sum persists the "
+    "variate-tagged input and its _pid assignment — local prefix sums "
+    "AND bucket totals must read ONE materialization",
     "q136_semdedup_auto": "auto-k cells feed centroid AND refine passes",
     "q141_repeated_substrings": "suffix-window table feeds span AND rollup",
     "q142_substring_selfdedup": "span table feeds excision AND digest",
-    "q143_zorder_skipping": "zkey projection feeds two independent sort "
-    "rails, each of whose range exchange samples boundaries (executes "
-    "the child) before shuffling it",
-    "q144_quantile_calibration": "scored projection feeds the global "
-    "rank rail, the corpus count AND the per-source rank window (one "
-    "quality_score pass — the q104 class)",
+    "q143_zorder_skipping": "quantiles._range_prefix_sum persists the "
+    "zkey projection once for both layout rails, plus one _pid "
+    "assignment per layout",
+    "q144_quantile_calibration": "quantiles._range_prefix_sum persists "
+    "the scored projection, which the corpus count and the per-source "
+    "rank window then read too (one quality_score pass — the q104 "
+    "class), and its _pid assignment",
     "q145_selfdedup_fixpoint": "pass-1 persist is read by pass-2 detection",
     "q147_source_overlap": "ONE distinct (source, shingle) table feeds "
     "sizes, pair fan-out AND the MinHash 64-min-agg (round 10); the "
@@ -223,12 +228,15 @@ PERSISTS_BY_DESIGN: dict[str, str] = {
     "q158_edit_distance_join": "deletion-variant table feeds both "
     "candidate self-join sides (editdist.edit_distance_join)",
     "q159_sorted_neighborhood": "ranked table feeds probe fan-out AND "
-    "rank-keyed right side (blocking.sorted_neighborhood_pairs)",
+    "rank-keyed right side (blocking.sorted_neighborhood_pairs); "
+    "quantiles._range_prefix_sum persists its input and _pid assignment",
     "q160_record_linkage": "deletion-variant table feeds both candidate "
     "sides (q158 machinery)",
     "q161_blocking_recall": "LSH branch is q25 machinery (shingle table "
     "feeds bands AND verify); SNM branch persists its ranked table; the "
-    "verify shingle table feeds both Jaccard join sides",
+    "verify shingle table feeds both Jaccard join sides; "
+    "quantiles._range_prefix_sum persists the SNM input and _pid "
+    "assignment",
     "q162_containment_join": "containment_join persists the distinct-set "
     "table (feeds freq, prefix, index and both verify sides)",
     "q163_skew_report": "melted (key_col, key) group-size table feeds "
@@ -239,21 +247,24 @@ PERSISTS_BY_DESIGN: dict[str, str] = {
     "q166_association_rules": "basket-array table feeds basket total, "
     "item counts AND pair fan-out (itemsets.pair_association_rules)",
     "q169_sample_quantiles": "exact side rides the q50 quantile rail "
-    "(distinct-value table feeds the range sampler AND shuffle)",
+    "(quantiles._range_prefix_sum persists the distinct-value table and "
+    "its _pid assignment)",
     "q170_ingest_novelty": "distinct (batch, shingle) table feeds the "
     "first-arrival MIN AND the per-batch size rollup",
     "q172_packing_tradeoff": "tokenized doc projection feeds the pack "
     "rail AND the shard/pad aggregates for every candidate capacity",
-    "q186_weighted_quantiles": "distinct-(value, weight-sum) table feeds "
-    "the range sampler AND shuffle (quantiles.weighted_quantile_cuts)",
+    "q186_weighted_quantiles": "quantiles._range_prefix_sum persists the "
+    "distinct-(value, weight-sum) table and its _pid assignment "
+    "(quantiles.weighted_quantile_cuts)",
     "q196_hits_link_analysis": "distinct edge table feeds all three "
     "power-iteration consumers (a1, h1 join, a2 join)",
-    "q197_decile_mobility": "per-year spend tables feed the rank rail "
-    "(range-boundary sampler + shuffle) AND the decile denominator",
+    "q197_decile_mobility": "quantiles._range_prefix_sum persists each "
+    "per-year spend table (range-boundary sampler + shuffle) and its "
+    "_pid assignment; the decile denominator is the rail's total",
     "q198_touch_attribution": "attributed purchases feed both model "
     "rollups — one per-user window pass instead of two",
-    "q189_conversion_lag": "quantile rail distinct-value table feeds the "
-    "range sampler AND shuffle (q50 machinery)",
+    "q189_conversion_lag": "quantiles._range_prefix_sum persists the "
+    "distinct-value table and its _pid assignment (q50 machinery)",
 }
 
 
